@@ -19,7 +19,9 @@ object Similarity {
   /** True when the graft native expressions are registered in the active session
     * (spark.sql.extensions=graft.plans.GraftExtensions). */
   private def nativeExprs: Boolean =
-    nativeFnExists(graft.plans.NativeExpressions.dotName)
+    try org.apache.spark.sql.SparkSession.active.catalog
+      .functionExists(graft.plans.NativeExpressions.dotName)
+    catch { case _: Throwable => false }
 
   /** Elementwise dot product of two float-array columns, accumulated left-to-right
     * in double — identical semantics on both paths: the native codegen'd DotF32
@@ -140,15 +142,12 @@ object Similarity {
       .orderBy(col("__h"), col("id")).limit(nCentroids)
       .select(col("v")).collect()
       .map(_.getSeq[Float](0).toArray)
+    // the assignment is a per-row column over an input spread across the
+    // cores: at large k the probe work dominates each iteration, and a
+    // narrow scan would run all of it on one core
+    val spread = spreadWide(base)
     for (_ <- 1 to iters) {
-      // under the table threshold the assignment is a scalar column (no
-      // join); above it, (id, cid) rows re-attach their vectors through one
-      // id-keyed join — at that scale training runs on a sample anyway
-      val assigned =
-        if (centroids.length < centroidTableThreshold)
-          base.withColumn("__cid", ivfAssign(col("v"), centroids))
-        else base.join(assignProbes(base, "id", "v", centroids, 1), "id")
-      val cells = assigned
+      val cells = spread.withColumn("__cid", ivfAssign(col("v"), centroids))
         .select(col("__cid"), posexplode(col("v")).as(Seq("__pos", "__x")))
         .groupBy(col("__cid"), col("__pos"))
         .agg(avg(col("__x")).as("__m"))
@@ -168,36 +167,25 @@ object Similarity {
   def ivfAssign(vec: Column, centroids: Array[Array[Float]]): Column =
     element_at(ivfProbes(vec, centroids, 1), 1)
 
-  private def nativeFnExists(name: String): Boolean =
-    try org.apache.spark.sql.SparkSession.active.catalog.functionExists(name)
-    catch { case _: Throwable => false }
-
-  /** The nProbe nearest centroid ids for a query vector (array column).
-    * Native path: graft_ivf_probes carries the centroid MATRIX as ONE
-    * literal array and scores it in a fused loop — plan size is
-    * k-independent, which is what lets the cluster count follow the corpus
-    * (k ∝ n, the SemDeDup posture) without the literal-expression form's
-    * k separate dot subtrees becoming the bottleneck. Fallback kept;
-    * identical score chain, tie-break, and null posture (a null vector is
-    * null on BOTH paths — parity in NativeExprSpec). */
-  def ivfProbes(vec: Column, centroids: Array[Array[Float]], nProbe: Int): Column =
-    if (nativeFnExists("graft_ivf_probes"))
-      call_function("graft_ivf_probes", vec,
-        typedlit(centroids.map(_.toSeq).toSeq), lit(nProbe))
-    else ivfProbesHof(vec, centroids, nProbe)
-
-  /** The fallback chain alone — reachable for the NativeExprSpec parity test. */
-  private[graft] def ivfProbesHof(vec: Column,
-      centroids: Array[Array[Float]], nProbe: Int): Column = {
-    val scored = array(centroids.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-      val bias = c.map(x => x.toDouble * x.toDouble).sum / 2.0
-      struct((dot(vec, typedlit(c.toSeq)) - bias).as("s"), lit(-i).as("ni"))
-    }: _*)
-    // null vector → null result (the native kernel's nullSafeEval posture;
-    // unguarded, the null dot scores would tie and emit cluster ids 0..n-1)
-    when(vec.isNotNull,
-      transform(slice(sort_array(scored, asc = false), 1, nProbe), s =>
-        s.getField("ni") * -1))
+  /** The nProbe nearest centroid ids of a vector column, nearest first —
+    * the one exact probe kernel, used at every centroid count. Score
+    * v·c − |c|²/2 (dot in double, left-to-right over the common prefix,
+    * null vector elements skipped), NaN scores largest, ties to the lower
+    * centroid id; a null vector gives null. The centroid matrix and its
+    * [[superGroups]] geometry ride the plan once per stage as a
+    * primitive-array model (graft.plans.IvfPrunedModel); each row scores
+    * the √k supers and exact-scores only the groups whose Cauchy–Schwarz
+    * bound can reach the top nProbe (graft.plans.IvfPruned). Built through
+    * ColumnBridge, so it needs no session extension. The matrix must be
+    * non-empty, rectangular and finite: IvfPruned.validate names the first
+    * row that is not. */
+  def ivfProbes(vec: Column, centroids: Array[Array[Float]], nProbe: Int): Column = {
+    graft.plans.IvfPruned.validate(centroids) // before the driver-side k-means
+    val (supers, gid) = superGroups(centroids)
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.plans.IvfProbesPrunedExpr(
+      ColumnBridge.expression(vec),
+      graft.plans.IvfPruned.build(centroids, supers, gid), nProbe))
   }
 
   /** ANN top-k via IVF inverted lists: corpus vectors are assigned once to
@@ -231,149 +219,35 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------
-  // Assignment at scale: literal-plan kernel vs broadcast centroid TABLE.
+  // Probe assignment as (id, cid) rows.
   // ------------------------------------------------------------------
 
-  /** Above this centroid count, assignment switches from the literal-plan
-    * kernel (ivfProbes — the centroid matrix rides the expression tree) to
-    * the broadcast-table plan ([[assignProbesTable]]). The literal kernel
-    * is ~5× cheaper PER PAIR (fused codegen vs the reservoir aggregate's
-    * typed reduce) but re-ships its k×dim literal with every task, so the
-    * crossover depends on rows-per-task, not k alone (fair measurements in
-    * SCALE.md: at 2,000 rows the table wins above k≈2-4k — 1.14 s vs
-    * 0.81 s at k=4096, 2.37 s vs 0.97 s at k=10240 — while at 200,000 rows
-    * the literal amortizes and stays ahead at k=6400). The threshold is
-    * placed for the bounded-rows shapes this library's queries and bench
-    * run; the hard wall the table path exists for is k ≳ 10⁵, where the
-    * literal stops being shippable at all, and past ~10⁴ the real answer
-    * is [[assignProbesHier]] (√k cost) regardless of path. Both flat paths
-    * are parity-proven set-exact, so the switch is purely a cost choice. */
+  /** Past this centroid count the STREAMING serves ([[indexShortlistStream]],
+    * [[maxSimStream]]) probe at group granularity through
+    * [[ladderProbeCids]] instead of exact per-row top-nProbe probes. Their
+    * recall contract is unit-anchored at k = 2176. Batch assignment has no
+    * threshold: [[ivfProbes]] is exact at every k. */
   private[graft] val centroidTableThreshold = 2048
 
   /** The `nProbe` nearest coarse clusters of every row, as (id, __cid)
-    * assignment rows — the one entry point every IVF consumer (semDedup,
-    * ivfTopK, ivfTrain) assigns through; picks the literal or table plan by
-    * centroid count. Identical semantics on both paths (same score chain
-    * v·c − |c|²/2, ties to the smaller cid; a null vector yields no
-    * assignment rows — the literal path's explode(null) drops the row).
-    *
-    * CONTRACT: `idCol` must be UNIQUE — the table path aggregates per id
-    * (duplicate-id rows would pool their candidates into one merged probe
-    * set where the literal path assigns per row). Every consumer here
-    * holds it by construction (corpus/query ids are keys). */
+    * assignment rows — the frame form of [[ivfProbes]] that semDedup,
+    * ivfTopK and the index paths assign through. A projection: every row
+    * assigns on its own (ids need not be unique), and a null vector yields
+    * no rows. The input is spread across the cores first ([[spreadWide]]),
+    * since the probe work per row grows with k. */
   def assignProbes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]], nProbe: Int): DataFrame =
-    if (centroids.length >= centroidTableThreshold) {
-      // well-formed driver matrix (every row non-null, uniform dim) →
-      // the exact bound-PRUNED kernel: √k super dots + surviving members
-      // per row instead of k dots + a k-row typed-aggregate reduce per row
-      // (set-parity proven in SimilaritySpec). Ragged/null-row models keep
-      // the broadcast-table plan, as does a genuinely tabular model source
-      // (assignProbesTable called directly).
-      val uniform = centroids(0) != null &&
-        centroids.forall(c => c != null && c.length == centroids(0).length)
-      if (uniform) assignProbesPruned(df, idCol, vecCol, centroids, nProbe)
-      else assignProbesTable(df, idCol, vecCol, centroidTable(df, centroids), nProbe)
-    }
-    else df.select(col(idCol),
-      explode(ivfProbes(col(vecCol), centroids, nProbe)).as("__cid"))
+    spreadWide(df.select(col(idCol), col(vecCol).as("__av")))
+      .select(col(idCol),
+        explode(ivfProbes(col("__av"), centroids, nProbe)).as("__cid"))
 
-  /** Exact bound-pruned flat assignment (the r18-verdict big-k restructure):
-    * the centroid matrix plus its memoized [[superGroups]] geometry ride the
-    * plan ONCE per stage as a primitive-array reference object
-    * (graft.plans.IvfPrunedModel), and each row scores √k super centroids,
-    * prunes groups by exact Cauchy–Schwarz bounds, and exact-scores only the
-    * survivors — per-row cost ~(√k + surviving members) instead of k dots
-    * fed through a per-pair typed aggregate. SET-EXACT vs the flat table
-    * path (same score chain, tie-break, and null posture — the bounds only
-    * skip provably-beaten groups), unlike [[assignProbesHier]] whose
-    * restricted probing is recall-approximate. Replaces the crossJoin +
-    * TopKAgg plan: no k×n pair stream, no aggregate — one projection. */
-  private[graft] def assignProbesPruned(df: DataFrame, idCol: String,
-      vecCol: String, centroids: Array[Array[Float]], nProbe: Int): DataFrame = {
-    require(nProbe >= 1, "assignProbesPruned: nProbe must be >= 1")
-    val (supers, gid) = superGroups(centroids)
-    val model = graft.plans.IvfPruned.build(centroids, supers, gid)
-    val rows = df.where(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol).as("__av"))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    spreadWide(rows).select(col(idCol),
-      explode(ColumnBridge.column(graft.plans.IvfProbesPrunedExpr(
-        ColumnBridge.expression(col("__av")), model, nProbe))).as("__cid"))
-  }
-
-  /** A trained centroid matrix as a (cid, vec) DataFrame — the driver-side
-    * model lifted into data so the assignment plan stays k-independent. At
-    * real scale the table can equally come from a distributed source
-    * (parquet of a sampled train run); [[assignProbesTable]] only needs the
-    * two columns. */
-  def centroidTable(like: DataFrame, centroids: Array[Array[Float]]): DataFrame = {
-    val spark = like.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("__ct_cid", "__ct_vec")
-  }
-
-  /** Broadcast-table probe assignment: one crossJoin against the broadcast
-    * (cid, vec) table — NOT a per-dimension posexplode join, so each
-    * (row, centroid) pair costs exactly one fused dot product, the same
-    * flops as the literal kernel — then a per-row top-nProbe via the
-    * BOUNDED reservoir aggregate (map-side combinable, ≤nProbe pairs of
-    * state per row, never a k-sized collect_list buffer). The centroid bias
-    * |c|²/2 is computed in-plan from the table so a parquet-sourced model
-    * needs no precomputed column. (cid, score) obeys TopKAgg's unique-id
-    * contract: cids are distinct per row by construction.
-    *
-    * 100 TB posture: the broadcast is k×dim floats (10⁴×64 ≈ 2.5 MB); the
-    * shuffle after partial aggregation is nProbe rows per document — the
-    * k×n pair stream never crosses the wire. Beyond broadcastable k
-    * (≳10⁷ centroids) assignment needs its own ANN recursion (IVF over the
-    * centroids); out of scope, documented. */
-  /** Spread a thin input across the cluster before a k-fanout join: the
-    * per-row work is k dots + k aggregate reduces — each INPUT partition
-    * becomes k× that in the nested-loop join, so a narrow scan (one
-    * parquet file) would run the whole k×n stream on one core. Wide
-    * inputs (the 100 TB case) already parallelize and skip the shuffle. */
+  /** Spread a thin input across the cluster before a heavy per-row
+    * projection: a narrow scan (one parquet file) would otherwise run the
+    * whole k-scaled probe stream on one core. Wide inputs (the 100 TB
+    * case) already parallelize and skip the shuffle. */
   private def spreadWide(rows: DataFrame): DataFrame = {
     val par = rows.sparkSession.sparkContext.defaultParallelism
     if (rows.rdd.getNumPartitions >= par) rows else rows.repartition(par)
-  }
-
-  /** |c|²/2 of the __ct_vec column, computed in-plan so a parquet-sourced
-    * centroid table needs no precomputed bias column. */
-  private def ctBias: Column = aggregate(col("__ct_vec"),
-    lit(0.0), (a, x) => a + x.cast("double") * x.cast("double")) / 2.0
-
-  /** The shared top-nProbe reduction of a scored (id, __s, __ct_cid) frame
-    * — ONE tail for the flat-table and hierarchical paths so tie-break and
-    * null posture cannot drift between them. One path for every nProbe:
-    * the bounded reservoir's O(1) keep/drop beats the seemingly-cheaper
-    * max(struct(score,-cid)) declarative aggregate — measured 1.3 s (udaf)
-    * vs 1.5 s (max-struct) on the 2000×10240 AssignScale shape; struct
-    * comparisons don't codegen into anything faster than the aggregator's
-    * primitive compare. */
-  private def topProbes(scored: DataFrame, idCol: String, nProbe: Int): DataFrame = {
-    val topk = udaf(new Sampling.TopKAgg(nProbe))
-    scored
-      .groupBy(col(idCol))
-      .agg(topk(col("__s"), col("__ct_cid")).as("__probes"))
-      .select(col(idCol), explode(col("__probes")).as("__p"))
-      .select(col(idCol), col("__p._2").cast("int").as("__cid"))
-  }
-
-  private[graft] def assignProbesTable(df: DataFrame, idCol: String,
-      vecCol: String, centroidTbl: DataFrame, nProbe: Int): DataFrame = {
-    require(nProbe >= 1, "assignProbesTable: nProbe must be >= 1")
-    val rows = df.where(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol).as("__av"))
-    val scored = spreadWide(rows)
-      .crossJoin(broadcast(centroidTbl
-        .select(col("__ct_cid"), col("__ct_vec"), ctBias.as("__ct_bias"))))
-      .select(col(idCol),
-        (dot(col("__av"), col("__ct_vec")) - col("__ct_bias")).as("__s"),
-        col("__ct_cid").cast("long").as("__ct_cid"))
-    topProbes(scored, idCol, nProbe)
   }
 
   /** Deterministic driver-side Lloyd's k-means over a MODEL-sized point set
@@ -503,9 +377,9 @@ object Similarity {
   }
 
   /** The STREAM-COMPOSABLE group ladder, shared by every streaming path
-    * past the literal probe regime ([[indexShortlistStream]] and
+    * past [[centroidTableThreshold]] ([[indexShortlistStream]] and
     * [[maxSimStream]] — one implementation, so the paths cannot drift):
-    * each row's `groupProbe` nearest √k literal SUPERS ([[superGroups]])
+    * each row's `groupProbe` nearest √k SUPERS ([[superGroups]])
     * explode in the frame's projection and ONE stateless broadcast join
     * fans each probed group out to its member cids. Adds `__cid`; all
     * other columns pass through. Candidates are a SUPERSET of the
@@ -525,14 +399,14 @@ object Similarity {
   }
 
   /** TWO-LEVEL (hierarchical) probe assignment — the documented fix for the
-    * k ∝ n regime where even the broadcast-table path's per-row cost (k
-    * dots) becomes the bottleneck: group the k centroids into ~√k
+    * k ∝ n regime where even exact assignment's per-row cost becomes the
+    * bottleneck: group the k centroids into ~√k
     * super-clusters (driver-side k-means over the MODEL — k rows, never
-    * corpus data), probe `groupProbe` super-clusters per row with the
-    * literal kernel (√k small), and score only the centroids of the probed
+    * corpus data), probe `groupProbe` super-clusters per row (√k small),
+    * and score only the centroids of the probed
     * groups — per-row cost √k + groupProbe·k/√k ≈ (1+groupProbe)·√k
     * instead of k. Score chain, tie-break, and null posture identical to
-    * [[assignProbesTable]]; only the candidate SET is restricted, so the
+    * [[assignProbes]]; only the candidate SET is restricted, so the
     * result is RECALL-APPROXIMATE vs flat assignment (a nearest centroid
     * in an unprobed group is missed — the standard IVF-of-IVF trade;
     * groupProbe = k2 degenerates to EXACT flat assignment, unit-anchored).
@@ -585,10 +459,11 @@ object Similarity {
     * only driver-side state (k×dim floats, ivfTrain's contract). Cluster
     * count must grow with the corpus (k ∝ n keeps cluster size and the
     * per-row pair budget constant — measured in SCALE.md); the
-    * assignment runs through [[assignProbes]], which switches from the
-    * literal-expression kernel to the broadcast centroid TABLE above
-    * [[centroidTableThreshold]] so the plan stays bounded while k scales
-    * freely (q_semantic_dedup_bigk exercises the table path at k > 10⁴). */
+    * assignment runs through [[assignProbes]], one exact bound-pruned
+    * projection at every k whose plan size does not grow with k
+    * (q_semantic_dedup runs it at k = 64, q_semantic_dedup_bigk at
+    * k > 10⁴). `hierAssign` swaps in the recall-approximate
+    * [[assignProbesHier]]. */
   def semDedup(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
                tau: Double, nCentroids: Int = 16, nProbe: Int = 2,
                iters: Int = 5, seed: Long = 42L,
@@ -598,10 +473,8 @@ object Similarity {
       ivfTrain(corpus, idCol, vecCol, dim, nCentroids, iters, seed))
     // multi-assign (nProbe nearest clusters) so an epsilon-perturbed near-dup
     // on a cluster boundary still meets its original — the ivfTopK probe
-    // argument applied symmetrically to the one corpus. assignProbes picks
-    // the literal or broadcast-table plan by centroid count (k ∝ n holds
-    // past the literal-plan regime); hierAssign opts into the two-level
-    // √k-cost assignment for extreme k (recall-approximate vs flat per
+    // argument applied symmetrically to the one corpus. hierAssign opts
+    // into the two-level √k-cost assignment for extreme k (recall-approximate vs flat per
     // assignProbesHier's contract — near-dup pairs still meet because both
     // sides compute the SAME probe sets within the perturbation margin).
     val keyed = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
@@ -1124,10 +997,9 @@ object Similarity {
     val qv = queries.select(col(queryId), col(vecCol).as("__pv"))
     // hierProbe = Some(groupProbe) opts the probe assignment into the
     // two-level √k ladder (assignProbesHier) — the k ≳ 10⁴ serving regime
-    // where even the broadcast-table path's k dots per query row is the
-    // bottleneck; recall-approximate per that operator's contract
-    // (groupProbe = √k degenerates to exact flat). Default stays the flat
-    // assignment ladder (literal → broadcast table by centroid count).
+    // where even exact assignment's per-row cost is the bottleneck;
+    // recall-approximate per that operator's contract (groupProbe = √k
+    // degenerates to exact flat). Default stays exact flat assignment.
     val probes = (hierProbe match {
       case Some(g) => assignProbesHier(qv, queryId, "__pv", cents, useProbe,
         groupProbe = g)
@@ -1179,14 +1051,12 @@ object Similarity {
       .withColumn("__qn", norm(col("__qv")))
     val qside =
       if (cents.length < centroidTableThreshold)
-        // literal regime: exact top-nProbe probes in the projection itself
+        // under the threshold: exact top-nProbe probes in the projection
         qlut.select(col(queryId), col("__lut"), col("__qn"),
           explode(ivfProbes(col("__qv"), cents, useProbe)).as("__cid"))
       else {
-        // PAST the literal regime (the r14 k ≥ 2048 gap): a per-row exact
-        // top-nProbe needs an aggregation, and Spark disallows a join AFTER
-        // a streaming aggregation — so the stream-composable form probes at
-        // GROUP granularity instead ([[ladderProbeCids]], shared with
+        // PAST the threshold: the stream-composable form probes at GROUP
+        // granularity ([[ladderProbeCids]], shared with
         // maxSimStream). Candidates are a SUPERSET of the two-level
         // top-nProbe frontier, so at a non-binding shortlist recall ≥ the
         // hier path's at equal groupProbe (anchored in SimilaritySpec;
@@ -2893,16 +2763,7 @@ object Similarity {
     val cents = trained.getOrElse(ivfTrain(
       corpusTokens.select(xxhash64(col(vecCol)).as("__tid"), col(vecCol)),
       "__tid", vecCol, dim, nCentroids))
-    // token quantizers are model-sized (√|Ctok|-ish): the literal kernel
-    // covers the whole regime this operator serves; past the literal
-    // threshold the right first stage is the STORED token index
-    // (writeIndex over tokens + indexTopKDistributed), not a bigger
-    // broadcast here — fail loudly rather than mis-assign
-    require(cents.length < centroidTableThreshold,
-      s"maxSimTopKPruned: ${cents.length} token centroids >= " +
-        s"$centroidTableThreshold — store the token index (writeIndex) " +
-        "and prune through it instead")
-    // per-ROW literal assignment (corpus doc ids are deliberately NOT
+    // per-ROW assignment (corpus doc ids are deliberately NOT
     // unique per token — every token assigns independently), collapsed to
     // distinct (doc, list) membership pairs
     val lists = corpusTokens
@@ -2987,9 +2848,8 @@ object Similarity {
 
   /** [[maxSimTopKIndexed]]'s CANDIDATE stage, factored so its plan is
     * assertable in isolation: probes keyed on (queryId, tokenId) — a
-    * struct key through [[assignProbes]] (unique by construction even
-    * under per-query POSITIONAL token ids; both the literal and
-    * broadcast-table regimes group by the key column as-is), queryId
+    * struct key through [[assignProbes]] (a per-row projection, so
+    * per-query POSITIONAL token ids cannot pool), queryId
     * recovered by field access, never a re-join on tokenId alone (the r16
     * cross-query probe fanout). Stored rows are (corpus_id = TOKEN id,
     * __cid [, owner]); candidates are the distinct owners of hit tokens.
@@ -3133,8 +2993,7 @@ object Similarity {
 
   /** STREAMING MaxSim from a STORED token index — late-interaction
     * retrieval composed with a query-token STREAM: each token's nProbe
-    * probes ride the stream's one projection (the literal centroid
-    * kernel), candidates come from STATELESS stream-static equi-joins
+    * probes ride the stream's one projection ([[ivfProbes]]), candidates come from STATELESS stream-static equi-joins
     * (lists on `__cid` → token ownership → raw corpus token vectors), and
     * the only stateful operator is ONE aggregation per QUERY whose state
     * is the bounded top-`shortlist` doc map of [[MaxSimTopNAgg]]
@@ -3188,7 +3047,7 @@ object Similarity {
       .withColumn("__qn", norm(col("__qv")))
     val q =
       if (cents.length < centroidTableThreshold)
-        // literal regime: exact per-token top-nProbe probes ride the
+        // under the threshold: exact per-token top-nProbe probes ride the
         // stream's projection directly
         qbase.withColumn("__cid", explode(ivfProbes(col("__qv"), cents,
           math.min(resolveNProbe(nProbe, cents.length), cents.length))))

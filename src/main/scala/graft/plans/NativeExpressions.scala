@@ -428,11 +428,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GeoPolyFnExpr].getName, s"graft_geo_$fn"),
         (children: Seq[Expression]) => GeoPolyFnExpr(children(0), children(1), fn)))
     }
-    e.injectFunction((
-      FunctionIdentifier("graft_ivf_probes"),
-      new ExpressionInfo(classOf[IvfProbesExpr].getName, "graft_ivf_probes"),
-      (children: Seq[Expression]) =>
-        IvfProbesExpr(children(0), children(1), children(2))))
     // statistical special functions (StatExpressions.scala)
     StatExpressions.names.foreach { case (kql, regName) =>
       e.injectFunction((
@@ -450,132 +445,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Nearest-centroid probes with the centroid MATRIX as one literal array —
-  * the large-k scale path for IVF assignment (Similarity.ivfProbes's
-  * literal-expression form embeds k separate dot subtrees in the plan; a
-  * few thousand centroids make the PLAN the bottleneck, while this is one
-  * fused loop over a single literal and is k-independent in plan size).
-  * Scores replicate the fallback's chain exactly: dot accumulated in
-  * double left-to-right over min(len) skipping null vector elements (the
-  * DotF32 contract), bias = Σx²/2 summed left-to-right, ties broken toward
-  * the lower centroid id (the (score desc, −cid desc) struct order). */
-object IvfProbes {
-  /** Per-centroid biases (Σx²/2, left-to-right — the fallback's chain).
-    * A null centroid row biases to NaN so it can never win a probe slot
-    * against any real centroid under the Double.compare order below. */
-  def biasesOf(cents: org.apache.spark.sql.catalyst.util.ArrayData): Array[Double] = {
-    val k = cents.numElements()
-    val biases = new Array[Double](k)
-    var ci = 0
-    while (ci < k) {
-      if (cents.isNullAt(ci)) biases(ci) = Double.NaN
-      else {
-        val c = cents.getArray(ci)
-        val m = c.numElements()
-        var b = 0.0
-        var j = 0
-        while (j < m) { val x = c.getFloat(j).toDouble; b += x * x; j += 1 }
-        biases(ci) = b / 2.0
-      }
-      ci += 1
-    }
-    biases
-  }
-  def eval(vec: org.apache.spark.sql.catalyst.util.ArrayData,
-      cents: org.apache.spark.sql.catalyst.util.ArrayData,
-      nProbe: Int,
-      biases: Array[Double]): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val k = cents.numElements()
-    val bs0 = if (biases != null) biases else biasesOf(cents)
-    val scores = new Array[Double](k)
-    var ci = 0
-    while (ci < k) {
-      if (cents.isNullAt(ci) || java.lang.Double.isNaN(bs0(ci))) {
-        // a null centroid row can never win a slot (NaN sorts LAST here —
-        // note the deliberate divergence from Spark's NaN-largest sort: a
-        // missing centroid must not hijack every assignment)
-        scores(ci) = Double.NegativeInfinity
-      } else {
-        val c = cents.getArray(ci)
-        val n = math.min(vec.numElements(), c.numElements())
-        var s = 0.0
-        var j = 0
-        while (j < n) {
-          if (!vec.isNullAt(j))
-            s += vec.getFloat(j).toDouble * c.getFloat(j).toDouble
-          j += 1
-        }
-        scores(ci) = s - bs0(ci)
-      }
-      ci += 1
-    }
-    val nOut = math.min(math.max(nProbe, 0), k)
-    val out = new Array[Any](nOut)
-    val taken = new Array[Boolean](k)
-    var r = 0
-    while (r < nOut) {
-      var best = -1
-      var bs = Double.NegativeInfinity
-      var i = 0
-      while (i < k) {
-        // Double.compare: NaN scores (a NaN vector element) order LARGEST,
-        // matching the fallback's sort_array; strict > keeps the earliest
-        // (lowest) id on exact ties
-        if (!taken(i) &&
-            (best < 0 || java.lang.Double.compare(scores(i), bs) > 0)) {
-          best = i; bs = scores(i)
-        }
-        i += 1
-      }
-      taken(best) = true
-      out(r) = best
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
-/** graft_ivf_probes(vec, centroids, n) → the n nearest centroid ids. The
-  * per-centroid biases are constants of the (foldable) centroid literal, so
-  * they are computed ONCE at plan build and shipped into generated code as
-  * a reference object — the hot per-row loop pays only the k×dim dot. */
-case class IvfProbesExpr(first: Expression, second: Expression,
-    third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(ArrayType(FloatType, _), _),
-          IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_ivf_probes expects (array<float>, array<array<float>>, int), got $other")
-    }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  @transient private lazy val biases: Array[Double] =
-    if (second.foldable) {
-      val c = second.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-      if (c == null) null else IvfProbes.biasesOf(c.asInstanceOf[ArrayData])
-    } else null // non-literal matrix: eval derives biases per call
-  override protected def nullSafeEval(v: Any, c: Any, n: Any): Any =
-    IvfProbes.eval(v.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
-      n.asInstanceOf[Int], biases)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = ctx.addReferenceObj("ivfBiases", biases, "double[]")
-    defineCodeGen(ctx, ev, (v, c, n) =>
-      s"graft.plans.IvfProbes.eval($v, $c, $n, $b)")
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(first = f, second = s, third = t)
-  override def prettyName: String = "graft_ivf_probes"
-}
-
 /** Driver-built pruning model for [[IvfProbesPrunedExpr]]: the full centroid
   * matrix plus its √k super-group geometry (Similarity.superGroups) with
   * per-group Cauchy–Schwarz bounds. All fields are primitive arrays, so the
-  * model ships ONCE per stage inside the task binary as compact blocks —
-  * never the boxed per-task literal graph that made the literal kernel
-  * unshippable at large k. Contract (enforced by the builder): every
-  * centroid row non-null, all rows the same length. */
+  * model ships ONCE per stage inside the task binary as compact blocks, not
+  * as a boxed per-task literal graph. Contract (enforced by the builder):
+  * at least one centroid, every row non-null, the same length and finite.
+  *
+  * Equality is by CONTENT: two builds over equal matrices are equal models,
+  * so the expressions carrying them canonicalize equal and CacheManager /
+  * the Caching registry dedupe repeated constructions of one query. */
 case class IvfPrunedModel(cents: Array[Array[Float]], biases: Array[Double],
     supers: Array[Array[Float]], radii: Array[Double],
     minb: Array[Double], maxb: Array[Double], members: Array[Array[Int]],
@@ -584,34 +463,73 @@ case class IvfPrunedModel(cents: Array[Array[Float]], biases: Array[Double],
   override def toString: String =
     s"IvfPrunedModel(k=${cents.length}, " +
       s"dim=${if (cents.isEmpty) 0 else cents(0).length}, groups=${supers.length})"
+
+  @transient private lazy val contentHash: Int = java.util.Arrays.deepHashCode(
+    Array[AnyRef](cents, supers, members))
+  override def hashCode: Int = contentHash
+  override def equals(o: Any): Boolean = o match {
+    case m: IvfPrunedModel =>
+      (this eq m) || (cents.length == m.cents.length &&
+        supers.length == m.supers.length && contentHash == m.contentHash &&
+        java.util.Arrays.deepEquals(
+          Array[AnyRef](cents, biases, supers, radii, minb, maxb, members, sbiases),
+          Array[AnyRef](m.cents, m.biases, m.supers, m.radii, m.minb, m.maxb,
+            m.members, m.sbiases)))
+    case _ => false
+  }
 }
 
-/** Exact bound-pruned flat probe assignment — the large-k kernel behind
-  * Similarity.assignProbes. Scores replicate IvfProbes' chain exactly (dot
+/** Exact bound-pruned flat probe assignment — the one exact kernel behind
+  * Similarity.ivfProbes and Similarity.assignProbes. Scores: dot
   * accumulated in double left-to-right over min(len) skipping null vector
-  * elements; bias Σx²/2 left-to-right; ties to the lower centroid id), and
-  * the result is SET-EXACT vs the flat scan: per group g with super s_g,
+  * elements, minus the bias Σx²/2 summed left-to-right; the nProbe best
+  * come out best first under Double.compare (NaN scores largest), ties to
+  * the lower centroid id. The result is SET-EXACT vs the flat scan: per
+  * group g with super s_g,
   * radius r_g = max|c−s_g| and bias range [minb_g, maxb_g], every member
   * score lies in [v·s_g − |v|r_g − maxb_g, v·s_g + |v|r_g − minb_g]
   * (Cauchy–Schwarz). With t = the nProbe-th largest group LOWER bound, at
   * least nProbe centroids score ≥ t (each group is non-empty), so a group
   * whose UPPER bound is < t cannot hold a top-nProbe centroid and its
   * members are skipped without scoring. Per-row cost falls from k dots to
-  * √k super dots + the surviving groups' members. A small slack keeps the
+  * √k super dots + the surviving groups' members; a single group is the
+  * flat scan. A small slack keeps the
   * cut conservative under floating-point rounding (extra survivors are
   * merely scored exactly; droppees are proven strictly beaten). Non-finite
   * vectors (NaN/Inf elements) disable pruning for that row and take the
-  * full exact scan, preserving IvfProbes' NaN-largest comparator order. */
+  * full exact scan, so the NaN-largest order holds there too. Centroids
+  * must be finite: a NaN or infinite centroid would score outside its
+  * group's bounds, so [[build]] rejects it. */
 object IvfPruned {
+  /** Rejects a matrix the bounds cannot cover: no rows, or a row that is
+    * null, of another length than row 0, or holds a NaN/±Inf element. The
+    * message names the first offending row. */
+  def validate(cents: Array[Array[Float]]): Unit = {
+    require(cents.nonEmpty, "IvfPruned: the centroid matrix has no rows")
+    var i = 0
+    while (i < cents.length) {
+      val c = cents(i)
+      require(c != null, s"IvfPruned: centroid row $i is null")
+      require(c.length == cents(0).length, s"IvfPruned: centroid row $i " +
+        s"has ${c.length} elements, row 0 has ${cents(0).length}")
+      var j = 0
+      while (j < c.length) {
+        require(java.lang.Float.isFinite(c(j)),
+          s"IvfPruned: centroid row $i has a non-finite element ${c(j)} at $j")
+        j += 1
+      }
+      i += 1
+    }
+  }
+
   def build(cents: Array[Array[Float]], supers: Array[Array[Float]],
       gid: Array[Int]): IvfPrunedModel = {
+    validate(cents)
     val k = cents.length
-    require(k > 0 && cents.forall(c => c != null && c.length == cents(0).length),
-      "IvfPruned: centroid rows must be non-null and uniform-length")
     val g = supers.length
     val biases = new Array[Double](k)
     var i = 0
-    while (i < k) { // the exact bias chain of IvfProbes.biasesOf
+    while (i < k) {
       val c = cents(i); var b = 0.0; var j = 0
       while (j < c.length) { val x = c(j).toDouble; b += x * x; j += 1 }
       biases(i) = b / 2.0
@@ -640,7 +558,7 @@ object IvfPruned {
     val sbiases = new Array[Double](g)
     i = 0
     while (i < g) { // supers get the same bias chain (the hier ladder scores
-      val s = supers(i); var b = 0.0; var j = 0 // groups with ivfProbes)
+      val s = supers(i); var b = 0.0; var j = 0 // groups like centroids)
       while (j < s.length) { val x = s(j).toDouble; b += x * x; j += 1 }
       sbiases(i) = b / 2.0
       i += 1
@@ -653,7 +571,7 @@ object IvfPruned {
     * Similarity.assignProbesHier's ladder (explode top-groupProbe supers →
     * broadcast member join → per-row top-nProbe): the CANDIDATE SET, score
     * chain, and both tie-breaks replicate the ladder exactly (supers scored
-    * v·s − |s|²/2 with ties to the lower group id — the ivfProbes
+    * v·s − |s|²/2 with ties to the lower group id — the flat kernel's
     * comparator; members scored v·c − |c|²/2 with ties to the lower cid),
     * so the output is row-identical; only the explode + join + typed
     * aggregate machinery is gone. Like the ladder, the result is
@@ -679,7 +597,7 @@ object IvfPruned {
     val sScores = new Array[Double](g)
     var gi = 0
     while (gi < g) { sScores(gi) = dotTo(m.supers(gi)) - m.sbiases(gi); gi += 1 }
-    // top-ng groups: IvfProbes' selection (Double.compare, strict >,
+    // top-ng groups: the flat selection (Double.compare, strict >,
     // ascending scan → ties to the lower gid)
     val gTaken = new Array[Boolean](g)
     val gSel = new Array[Int](ng)
@@ -819,9 +737,9 @@ object IvfPruned {
       scores(q) = dotTo(m.cents(ci)) - m.biases(ci)
       q += 1
     }
-    // selection identical to IvfProbes.eval: Double.compare (NaN largest),
-    // ties to the LOWER centroid id — made explicit here because candidates
-    // are grouped, not in ascending-cid order
+    // selection: Double.compare (NaN largest), ties to the LOWER centroid
+    // id — made explicit because candidates are grouped, not in
+    // ascending-cid order
     val nOut = math.min(math.max(nProbe, 0), k)
     val out = new Array[Any](nOut)
     val taken = new Array[Boolean](nc)
@@ -848,12 +766,10 @@ object IvfPruned {
   }
 }
 
-/** graft-internal (constructed programmatically by Similarity.assignProbes,
-  * never via the function registry — the model rides the expression as a
-  * reference object): exact bound-pruned probe assignment. Same output,
-  * null posture, and tie semantics as graft_ivf_probes over the same
-  * matrix (set-parity asserted in SimilaritySpec); only per-row WORK and
-  * per-task shipping change. */
+/** graft_ivf_probes_pruned(vec) → the nProbe nearest centroid ids, nearest
+  * first ([[IvfPruned.eval]]); a null vector gives null. graft-internal:
+  * constructed by Similarity.ivfProbes, never via the function registry —
+  * the model rides the expression as a reference object. */
 case class IvfProbesPrunedExpr(child: Expression, model: IvfPrunedModel,
     nProbe: Int) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

@@ -1123,10 +1123,9 @@ object NorthStarQueries {
     // 10176 far-away decoy centroids (every component 1000 — the |c|²/2
     // bias ≈ 3.2e7 dwarfs any v·c on unit-scale fixture vectors, so a decoy
     // can never enter a probe set and the ANSWER is identical). What changes
-    // is the PLAN: above Similarity.centroidTableThreshold the assignment
-    // runs as a broadcast centroid TABLE + bounded top-nProbe aggregate —
-    // plan size k-independent, the k ∝ n posture past the literal-plan
-    // regime (the 100 TB path; crossover measured in SCALE.md).
+    // is the WORK: the assignment kernel (the same one projection as at
+    // k = 64) prunes whole decoy groups by its bounds — plan size stays
+    // k-independent, the k ∝ n posture (the 100 TB path; SCALE.md).
     QueryDef("q_semantic_dedup_bigk",
       (s, d) => {
         val emb = T(s, d, "embeddings")
@@ -1623,8 +1622,8 @@ object NorthStarQueries {
               |ORDER BY id_s, ref_id""".stripMargin)),
 
     // STREAMING SemDeDup: an embedding stream deduped against a static
-    // reference corpus with NO state store — the cluster model is literal
-    // centroid expressions (stateless on the stream), both sides 2-probe
+    // reference corpus with NO state store — the cluster model rides the
+    // probe expression (stateless on the stream), both sides 2-probe
     // multi-assign, and the residual keeps only the FIRST shared probed
     // cluster per pair (the one-meet trick, so exactly one emit per pair
     // with no distinct and no watermark). Planted contract: each perturbed

@@ -239,19 +239,19 @@ object Tables {
     // AQE coalesced the whole write to ONE task that opened every bucket's
     // writer serially (measured: all compacted files named part-00000; a
     // 0.45 s single-task write stage with 31 cores idle). The count is
-    // bounded by the DESTINATION's real bucket count — known driver-side
-    // from the segment tree's partition directories, no data pass — so a
+    // bounded by the SOURCE tree's bucket count (the rewrite keeps every
+    // bucket) — known driver-side from its partition directories on the
+    // path's own filesystem, no data pass — so a
     // small compaction never pays defaultParallelism near-empty write
     // tasks (the c8-beats-c32 overhead signature from the r18 scaling
     // run). The per-partition sort restores appendSegment's fully
     // time-sorted files (row-group min/max BRIN posture) which the dedup
     // aggregate otherwise destroys on rewrite.
+    val src = new org.apache.hadoop.fs.Path(path)
     val nBuckets =
-      try {
-        val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(new org.apache.hadoop.fs.Path(path))
-          .count(_.getPath.getName.startsWith("ts_bucket="))
-      } catch { case _: Throwable => 0 }
+      try src.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(src)
+        .count(_.getPath.getName.startsWith("ts_bucket="))
+      catch { case _: java.io.FileNotFoundException => 0 }
     val par = spark.sparkContext.defaultParallelism
     val n = if (nBuckets >= 1) math.min(nBuckets, par) else par
     dedupRows(df, Seq(tsCol, dedupCol))

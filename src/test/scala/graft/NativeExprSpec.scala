@@ -306,7 +306,7 @@ class NativeExprSpec extends SparkSpec {
     assert(bad.forall(r => r.isNullAt(0) && r.isNullAt(1)))
   }
 
-  test("native ivf probes match the literal-expression fallback, order and ties") {
+  test("ivf probes kernel matches the reference scan, order and ties") {
     val rnd = new scala.util.Random(53)
     val dim = 16
     val centroids = Array.fill(24)(Array.fill(dim)(rnd.nextFloat() * 2 - 1))
@@ -316,20 +316,110 @@ class NativeExprSpec extends SparkSpec {
     val vecs: Seq[Seq[java.lang.Float]] =
       Seq.fill(40)(Seq.fill[java.lang.Float](dim)(rnd.nextFloat() * 2 - 1)) ++ Seq(
         Seq.fill[java.lang.Float](dim)(0f), // zero vector: every score is −bias
-        null, // null vector: null on BOTH paths
-        // NaN element: every score is NaN — the fallback's sort orders NaN
-        // largest, so the kernel's Double.compare must agree
+        null, // null vector: null result
+        // NaN element: every score is NaN, which orders largest
         Seq.fill[java.lang.Float](dim)(Float.NaN),
-        Seq[java.lang.Float](1f, null, 2f)) // null elements skip on both paths
+        Seq[java.lang.Float](1f, null, 2f)) // null elements are skipped
     val df = vecs.toDF("v").select(col("v").cast("array<float>").as("v"))
+    val cents = IvfOracles.arrayData(centroids)
     Seq(1, 2, 4, 30).foreach { n =>
-      val out = df.select(
-        (call_function("graft_ivf_probes", col("v"),
-          typedlit(centroids.map(_.toSeq).toSeq), lit(n)) <=>
-          graft.functions.Similarity.ivfProbesHof(col("v"), centroids, n))
-          .as("same")).collect()
-      assert(out.forall(_.getBoolean(0)), s"ivf probes diverged at nProbe=$n")
+      // through the session's whole-stage codegen path
+      val out = df.select(col("v"),
+        graft.functions.Similarity.ivfProbes(col("v"), centroids, n))
+        .collect()
+      out.foreach { r =>
+        if (r.isNullAt(0)) assert(r.isNullAt(1), s"null vector probed at nProbe=$n")
+        else {
+          val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            r.getSeq[java.lang.Float](0).map(x => x: Any).toArray)
+          val want = IvfOracles.probes(v, cents, n).array.toSeq
+          assert(r.getSeq[Int](1) == want,
+            s"ivf probes diverged at nProbe=$n for ${r.get(0)}")
+        }
+      }
     }
+  }
+
+  test("ivf probes kernel equals the reference scan on non-finite, null and tied inputs") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.plans.{IvfProbesPrunedExpr, IvfPruned}
+    // few distinct values, so duplicate centroids and exact score ties occur
+    val finite = Gen.oneOf(-1f, -0.5f, 0f, 0.5f, 1f, 2f)
+    val elem: Gen[java.lang.Float] = Gen.frequency(
+      12 -> finite.map(x => x: java.lang.Float),
+      1 -> Gen.const(Float.NaN: java.lang.Float),
+      1 -> Gen.const(Float.PositiveInfinity: java.lang.Float),
+      1 -> Gen.const(Float.NegativeInfinity: java.lang.Float),
+      1 -> Gen.const(null: java.lang.Float))
+    val dim = 6
+    val vec: Gen[Array[java.lang.Float]] = Gen.frequency(
+      8 -> Gen.listOfN(dim, elem).map(_.toArray),
+      1 -> Gen.const(Array.fill[java.lang.Float](dim)(0f)),
+      1 -> Gen.const(null: Array[java.lang.Float]))
+    val vecType = ArrayType(FloatType, containsNull = true)
+    def caseFor(k: Int): Gen[(Array[Array[Float]], Int, List[Array[java.lang.Float]])] =
+      for {
+        distinct <- Gen.choose(1, math.min(k, 40))
+        base <- Gen.listOfN(distinct, Gen.listOfN(dim, finite).map(_.toArray))
+        picks <- Gen.listOfN(k, Gen.choose(0, distinct - 1))
+        nProbe <- Gen.oneOf(0, 1, k, k + 1)
+        vecs <- Gen.listOfN(6, vec)
+      } yield (picks.map(i => base(i).clone()).toArray, nProbe, vecs)
+    Seq(1 -> 40, 2 -> 40, 32 -> 30, 2080 -> 6).foreach { case (k, runs) =>
+      val prop = Prop.forAll(caseFor(k)) { case (centroids, nProbe, vecs) =>
+        // the model Similarity.ivfProbes builds
+        val (supers, gid) = graft.functions.Similarity.superGroups(centroids)
+        val model = IvfPruned.build(centroids, supers, gid)
+        val cents = IvfOracles.arrayData(centroids)
+        vecs.forall { v =>
+          val data = if (v == null) null
+            else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+              v.map(x => x: Any))
+          val got = IvfProbesPrunedExpr(Literal(data, vecType), model, nProbe)
+            .eval(null)
+          if (data == null) got == null
+          else got.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+            .toIntArray().toSeq == IvfOracles.probes(data, cents, nProbe).array.toSeq
+        }
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(runs), prop)
+      assert(res.passed, s"k=$k: ${res.status}")
+    }
+  }
+
+  test("ivf probe models reject null, ragged and non-finite centroid rows by index") {
+    val good = Array(Array(1f, 0f), Array(0f, 1f))
+    Seq(
+      (good :+ null.asInstanceOf[Array[Float]], "row 2 is null"),
+      (good :+ Array(1f), "row 2 has 1 elements"),
+      (Array(Array(0f, 0f), Array(Float.NaN, 0f)) ++ good, "row 1 has a non-finite"),
+      (good ++ good :+ Array(0f, Float.PositiveInfinity), "row 4 has a non-finite"),
+      (good :+ Array(Float.NegativeInfinity, 0f), "row 2 has a non-finite")
+    ).foreach { case (bad, msg) =>
+      val e = intercept[IllegalArgumentException](
+        graft.functions.Similarity.ivfProbes(col("v"), bad, 1))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val empty = intercept[IllegalArgumentException](
+      graft.functions.Similarity.ivfProbes(col("v"), Array.empty[Array[Float]], 1))
+    assert(empty.getMessage.contains("no rows"), empty.getMessage)
+  }
+
+  test("ivf probes over equal centroid matrices build sameResult plans") {
+    val rnd = new scala.util.Random(11)
+    val centroids = Array.fill(48)(Array.fill(8)(rnd.nextFloat()))
+    val copy = centroids.map(_.clone())
+    val df = Seq(Seq.fill(8)(0.5f)).toDF("v")
+    def plan(c: Array[Array[Float]]) = df.select(
+      graft.functions.Similarity.ivfProbes(col("v"), c, 2).as("p"))
+      .queryExecution.analyzed
+    assert(plan(centroids).sameResult(plan(copy)),
+      "equal matrices must canonicalize equal")
+    copy(5)(3) += 1f
+    assert(!plan(centroids).sameResult(plan(copy)),
+      "different matrices must not canonicalize equal")
   }
 
   test("empty and null-element arrays evaluate safely") {

@@ -1219,14 +1219,13 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "corpus_id").as[(Long, Long)].collect().toMap
     assert(pruned.size == 10)
     assert(pruned.forall { case (q, c) => c == q - 1000000L }, pruned.toString)
-    // oversized token quantizer fails loudly toward the stored-index path
+    // a large token quantizer runs through the same exact kernel: probing
+    // every list still equals the exact path
     val bigCents = Array.tabulate(2176, 64)((i, j) =>
       (((i * 131 + j * 17) % 997) / 997.0f))
-    val e = intercept[IllegalArgumentException] {
-      Similarity.maxSimTopKPruned(queryTok, corpusTok, k = 1, dim = 64,
-        trained = Some(bigCents))
-    }
-    assert(e.getMessage.contains("writeIndex"), e.getMessage)
+    assert(rows(Similarity.maxSimTopKPruned(queryTok, corpusTok, k = 3,
+      dim = 64, nProbe = bigCents.length, trained = Some(bigCents))) == rows(exact),
+      "full-probe pruned MaxSim at k = 2176 must equal the exact path")
     // STORED-token-index first stage: same frozen coarse model ⇒ identical
     // results to the in-memory pruned path by construction, and the lists
     // scan is DPP-pruned like every stored serve
@@ -2065,13 +2064,12 @@ class SimilaritySpec extends SparkSpec {
     // higher cid, so the tie-break (lower cid) is exercised at every argmax
     val decoys = Array.tabulate(3000, 64)((i, j) => 500f + ((i + j) % 5).toFloat)
     val cents = real ++ decoys ++ real.map(_.clone())
-    assert(cents.length >= Similarity.centroidTableThreshold)
     for (nProbe <- Seq(1, 2, 5)) {
-      val pruned = Similarity.assignProbesPruned(emb, "vec_id", "embedding",
+      val pruned = Similarity.assignProbes(emb, "vec_id", "embedding",
           cents, nProbe)
         .as[(Long, Int)].collect().toSet
-      val tbl = Similarity.assignProbesTable(emb, "vec_id", "embedding",
-          Similarity.centroidTable(emb, cents), nProbe)
+      val tbl = IvfOracles.assignProbesTable(emb, "vec_id", "embedding",
+          IvfOracles.centroidTable(emb, cents), nProbe)
         .as[(Long, Int)].collect().toSet
       assert(pruned == tbl, s"nProbe=$nProbe: pruned != table " +
         s"(only-pruned=${(pruned -- tbl).take(5)}, only-table=${(tbl -- pruned).take(5)})")
@@ -2080,12 +2078,12 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     val withNull = Seq((1L, Array.fill(64)(0.5f)),
       (2L, null.asInstanceOf[Array[Float]])).toDF("id", "v")
-    val out = Similarity.assignProbesPruned(withNull, "id", "v", cents, 1)
+    val out = Similarity.assignProbes(withNull, "id", "v", cents, 1)
       .as[(Long, Int)].collect()
     assert(out.map(_._1).toSet == Set(1L))
   }
 
-  test("broadcast-table assignment matches the literal kernel exactly") {
+  test("ivfProbes column matches the broadcast-table oracle exactly") {
     val emb = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val centroids = Similarity.ivfTrain(emb, "vec_id", "embedding", 64,
@@ -2098,18 +2096,18 @@ class SimilaritySpec extends SparkSpec {
           explode(Similarity.ivfProbes(col("embedding"), centroids, nProbe))
             .as("__cid"))
         .as[(Long, Int)].collect().toSet
-      val tbl = Similarity.assignProbesTable(emb, "vec_id", "embedding",
-          Similarity.centroidTable(emb, centroids), nProbe)
+      val tbl = IvfOracles.assignProbesTable(emb, "vec_id", "embedding",
+          IvfOracles.centroidTable(emb, centroids), nProbe)
         .as[(Long, Int)].collect().toSet
       assert(lit == tbl, s"nProbe=$nProbe: paths disagree")
     }
-    // null vectors produce no assignment rows on the table path (the
-    // literal path's explode(null) posture)
+    // null vectors produce no assignment rows in the oracle either (the
+    // kernel's explode(null) posture)
     val withNull = Seq((1L, Array(1f, 0f)), (2L, null.asInstanceOf[Array[Float]]))
       .toDF("id", "v")
     val small = Array(Array(1f, 0f), Array(0f, 1f))
-    val out = Similarity.assignProbesTable(withNull, "id", "v",
-      Similarity.centroidTable(withNull, small), 1)
+    val out = IvfOracles.assignProbesTable(withNull, "id", "v",
+      IvfOracles.centroidTable(withNull, small), 1)
       .as[(Long, Int)].collect().toSet
     assert(out == Set((1L, 0)))
   }
@@ -2121,8 +2119,8 @@ class SimilaritySpec extends SparkSpec {
       nCentroids = 16, iters = 2)
     val k2 = math.round(math.sqrt(16.0)).toInt
     for (nProbe <- Seq(1, 2)) {
-      val flat = Similarity.assignProbesTable(emb, "vec_id", "embedding",
-          Similarity.centroidTable(emb, cents), nProbe)
+      val flat = IvfOracles.assignProbesTable(emb, "vec_id", "embedding",
+          IvfOracles.centroidTable(emb, cents), nProbe)
         .as[(Long, Int)].collect().toSet
       val hierAll = Similarity.assignProbesHier(emb, "vec_id", "embedding",
           cents, nProbe, groupProbe = k2)
@@ -2148,8 +2146,8 @@ class SimilaritySpec extends SparkSpec {
     // sampleCap below k forces the sampled path; probing ALL groups must
     // STILL degenerate to exact flat assignment (group membership only
     // restricts which groups are probed — scoring covers every group here)
-    val flat = Similarity.assignProbesTable(emb, "vec_id", "embedding",
-        Similarity.centroidTable(emb, cents), 1)
+    val flat = IvfOracles.assignProbesTable(emb, "vec_id", "embedding",
+        IvfOracles.centroidTable(emb, cents), 1)
       .as[(Long, Int)].collect().toSet
     val sampledAll = Similarity.assignProbesHier(emb, "vec_id", "embedding",
         cents, 1, groupProbe = k2, sampleCap = 6)
@@ -2163,20 +2161,26 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.9, s"sampled hier recall $recall < 0.9")
   }
 
-  test("assignProbes plan size is centroid-count-independent on the table path") {
+  test("assignProbes plan size is centroid-count-independent") {
     val emb = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    // 8192 synthetic centroids: above the threshold, so assignProbes must
-    // pick the table plan — k lives in a broadcast relation, not the tree
-    val k = 8192
-    val cents = Array.tabulate(k, 64)((i, j) => ((i * 64 + j) % 97) * 0.01f)
-    val plan = Similarity.assignProbes(emb, "vec_id", "embedding", cents, 2)
-      .queryExecution.optimizedPlan.treeString
-    assert(plan.length < 50000, s"table-path plan is ${plan.length} chars")
-    // the literal path at 64 centroids (under threshold) still works
-    val litPlan = Similarity.assignProbes(emb, "vec_id", "embedding",
-      cents.take(64), 2)
-    assert(litPlan.count() == emb.count() * 2)
+    // one projection with the model as a reference object at every k: no
+    // k-fanout join, no aggregate, and a plan string that does not grow with k
+    val cents = Array.tabulate(8192, 64)((i, j) => ((i * 64 + j) % 97) * 0.01f)
+    for (k <- Seq(64, 8192)) {
+      val df = Similarity.assignProbes(emb, "vec_id", "embedding", cents.take(k), 2)
+      val plan = df.queryExecution.optimizedPlan.treeString
+      assert(plan.length < 50000, s"k=$k: plan is ${plan.length} chars")
+      val exec = df.queryExecution.executedPlan.toString
+      assert(exec.contains("graft_ivf_probes_pruned"), exec)
+      assert(!exec.contains("NestedLoopJoin") && !exec.contains("Aggregate"), exec)
+      assert(df.count() == emb.count() * 2)
+    }
+    // a projection assigns per row: duplicate ids each get their own probes
+    val dup = Seq((1L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("id", "v")
+    val got = Similarity.assignProbes(dup, "id", "v",
+      Array(Array(1f, 0f), Array(0f, 1f)), 1).as[(Long, Int)].collect().sorted
+    assert(got.toSeq == Seq((1L, 0), (1L, 1)))
   }
 
   test("open-index model cache never serves stale models across a model rewrite") {

@@ -35,6 +35,56 @@ class TablesSpec extends SparkSpec {
     assert(compacted.count() == 2)
   }
 
+  test("compact counts source buckets on the path's own filesystem, not the default one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_seg_fs").toUri.toString // file:/...
+    val out = Files.createTempDirectory("graft_compact_fs").toUri.toString
+    val batch = Seq(
+      (java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1, "a"),
+      (java.sql.Timestamp.valueOf("2024-01-02 11:00:00"), 2, "b"),
+      (java.sql.Timestamp.valueOf("2024-01-03 12:00:00"), 3, "c")
+    ).toDF("_ts", "_dedup", "payload")
+    Tables.appendSegment(batch, dir)
+    Tables.appendSegment(batch, dir)
+    // 3 buckets under a 4-core session: the write must run min(3, 4) tasks,
+    // where a failed bucket listing would fall back to all 4
+    val sc = spark.sparkContext
+    assert(sc.defaultParallelism > 3)
+    // result-stage task count of every job in the compact group; a later
+    // "fence" job's start proves all of compact's events were delivered
+    val resultTasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("compact-fs") =>
+            resultTasks.add(j.stageInfos.maxBy(_.stageId).numTasks)
+          case Some("compact-fs-fence") => fenced.countDown()
+          case _ =>
+        }
+    }
+    val conf = sc.hadoopConfiguration
+    val oldDefault = conf.get("fs.defaultFS")
+    sc.addSparkListener(listener)
+    try {
+      conf.set("fs.defaultFS", "nosuchfs:///")
+      sc.setJobGroup("compact-fs", "compact under a foreign default filesystem")
+      try Tables.compact(spark, dir, out)
+      finally {
+        sc.clearJobGroup()
+        if (oldDefault == null) conf.unset("fs.defaultFS")
+        else conf.set("fs.defaultFS", oldDefault)
+      }
+      sc.setJobGroup("compact-fs-fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(spark.read.parquet(out).count() == 3)
+    val tasks = resultTasks.toArray.toSeq
+    assert(tasks.nonEmpty, "no compact job observed")
+    assert(tasks.last == 3, s"write ran ${tasks.last} tasks, jobs: $tasks")
+  }
+
   test("dedupRows keeps deterministic representative") {
     val df = Seq((1, "b"), (1, "a"), (2, "z")).toDF("k", "v")
     val kept = Tables.dedupRows(df, Seq("k")).orderBy("k")
