@@ -32,14 +32,14 @@ import org.apache.spark.sql.DataFrame
   *
   * Failure note: cached blocks are recomputable from lineage (unlike a
   * localCheckpoint), so executor loss degrades to recompute, never failure.
-  * Cached frames with an OWNED per-artifact lifecycle (the query registry's
-  * pipeCache) manage their own persists and bypass this registry — by
-  * OBJECT, not by plan: CacheManager dedupes cache entries by plan, so if
-  * an owned persist's plan `sameResult`s a registry entry they share one
-  * cache entry, and registry eviction can drop it out from under the
-  * owner. That failure mode is degrade-to-recompute only (the owner's
-  * Dataset stays marked persistent and re-caches on next materialization);
-  * correctness is never affected.
+  * Cached frames with an OWNED per-artifact lifecycle (the per-session
+  * frames of [[graft.SessionArtifacts]]) manage their own persists and
+  * bypass this registry — by OBJECT, not by plan: CacheManager dedupes
+  * cache entries by plan, so if an owned persist's plan `sameResult`s a
+  * registry entry they share one cache entry, and registry eviction can
+  * drop it out from under the owner. That failure mode is
+  * degrade-to-recompute only (the owner's Dataset stays marked persistent
+  * and re-caches on next materialization); correctness is never affected.
   */
 object Caching {
   private val maxEntries = 128
@@ -71,33 +71,39 @@ object Caching {
     * per-invocation intermediates COLD — min-of-N samples must not time
     * pass-2/3 warm reads of a barrier pass 1 computed. Safe because every
     * registry entry is re-persisted by its query's next construction
-    * (materialize() runs per invocation); OWNED persists (the per-corpus
-    * artifact caches — sig tables, CC labels, rank tables — that serve
-    * many queries per session and re-persist only via their memo) are
-    * deliberately untouched: dropping those would leave their memoized
-    * frames permanently uncached and mis-price every serve-path row. */
+    * (materialize() runs per invocation); the per-session artifacts of
+    * [[graft.SessionArtifacts]] (sig tables, CC labels, rank tables — they
+    * serve many queries per session and re-persist only through that
+    * registry) are deliberately untouched: dropping those would leave
+    * their frames permanently uncached and mis-price every serve-path row. */
   def clearSession(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
     entries.dequeueAll(_.sparkSession eq spark).foreach(drop)
   }
 
-  /** [[materialize]] with the spread decision derived from the PLAN: a
-    * binding whose plan aggregates (or limits) is bounded by its group
+  /** [[materialize]] with the spread decision derived from the PLAN ROOT:
+    * a binding whose root (looking through Project, Filter and
+    * SubqueryAlias) aggregates or limits is bounded by its group
     * cardinality — model-sized — and spreading it only adds an exchange
     * plus #cores-task jobs over a handful of rows (measured:
     * q_kql_materialize 0.19 → 0.23 s under the unconditional spread;
-    * q_dsir_weights 0.40 → 1.29 s under the blanket form). A scan-rooted
-    * binding is data-sized: it inherits the source's split count, and a
-    * thin source starves every consumer (the q_kql_spatial_join 3M-pair
+    * q_dsir_weights 0.40 → 1.29 s under the blanket form). Any other
+    * root is data-sized — a scan, or a join whose one side happens to be
+    * a small aggregate: it inherits its source's split count, and a thin
+    * source starves every consumer (the q_kql_spatial_join 3M-pair
     * haversine stage measured single-task) — those spread. */
   def materializeAuto(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit}
-    val bounded =
-      try df.queryExecution.analyzed.exists {
-        case _: Aggregate => true
-        case _: GlobalLimit => true
-        case _ => false
-      } catch { case _: Throwable => false }
-    materialize(df, spread = !bounded)
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @scala.annotation.tailrec
+    def bounded(p: LogicalPlan): Boolean = p match {
+      case _: Aggregate | _: GlobalLimit => true
+      case Project(_, c) => bounded(c)
+      case Filter(_, c) => bounded(c)
+      case SubqueryAlias(_, c) => bounded(c)
+      case _ => false
+    }
+    val isBounded =
+      try bounded(df.queryExecution.analyzed) catch { case _: Throwable => false }
+    materialize(df, spread = !isBounded)
   }
 
   /** Widen a THIN frame BEFORE an expensive downstream projection: the

@@ -327,9 +327,11 @@ object Similarity {
     * centroid matrix (deterministic k-means, strided sampling), yet every
     * query (re)construction re-paid the O(sampleCap·√k·dim·iters)
     * driver-side k-means (~0.2 s at k≈10⁴) — per bench sample, per serve
-    * path. Model-derivation caching, the ivfModelCache posture: content
-    * key = (geometry + full content hash), hits verified element-exact so
-    * a hash collision can never serve the wrong grouping; bounded FIFO. */
+    * path. Content key = (geometry + full content hash), hits verified
+    * element-exact so a hash collision can never serve the wrong grouping;
+    * bounded FIFO. Process-global, not a [[graft.SessionArtifacts]] entry:
+    * the key is the model's content, never a session, so an entry is valid
+    * for every session that holds the same centroids. */
   private val superGroupsCache = new java.util.LinkedHashMap[
       (Int, Int, Int, Int, Int),
       (Array[Array[Float]], (Array[Array[Float]], Array[Int]))](16, 0.75f, false) {
@@ -796,46 +798,28 @@ object Similarity {
     requireCleanIndex(fs, dir, "readIndexModels")
     // Open-once serving: every serve construction was re-collecting the
     // centroid and codebook tables as two Spark jobs (~0.3-0.4 s of
-    // driver-side open per request). The models are cached per (session,
-    // dir) behind a freshness validator of (manifest bytes, centroids/
-    // codebooks dir mtimes): ops that CHANGE models rewrite the manifest
-    // and swap/extend those dirs (writeIndex, rebuild, split), so they
-    // miss; append/compact/delete/merge leave models untouched and hit.
-    // The under-lock merge validation reads through readIndexModelsRaw
-    // and never sees this cache.
+    // driver-side open per request). The models are a session artifact per
+    // dir, stamped with a freshness validator of (manifest bytes,
+    // centroids/codebooks dir mtimes): ops that CHANGE models rewrite the
+    // manifest and swap/extend those dirs (writeIndex, rebuild, split), so
+    // the stamp differs and the entry is replaced; append/compact/delete/
+    // merge leave models untouched and hit. The under-lock merge
+    // validation reads through readIndexModelsRaw and never sees it.
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     // a tree the validator cannot even stat (missing manifest/model dirs)
-    // bypasses the cache entirely so the raw path raises its CONTRACTUAL
+    // bypasses the registry entirely so the raw path raises its CONTRACTUAL
     // loud error (IllegalArgumentException with the diff), not an FS one
     val validator =
       try Some((readUtf8(fs, manifestPath(dir)),
         fs.getFileStatus(p(s"$dir/centroids")).getModificationTime,
         fs.getFileStatus(p(s"$dir/codebooks")).getModificationTime))
       catch { case _: java.io.IOException => None }
-    val key = (System.identityHashCode(spark), dir)
     validator match {
       case None => readIndexModelsRaw(spark, dir)
       case Some(v) =>
-        modelOpenCache.synchronized {
-          val hit = modelOpenCache.get(key)
-          if (hit != null && hit._1 == v) return hit._2
-        }
-        val models = readIndexModelsRaw(spark, dir)
-        modelOpenCache.synchronized {
-          modelOpenCache.put(key, (v, models))
-        }
-        models
+        graft.SessionArtifacts.get(spark, "index_models", dir, stamp = v)(
+          readIndexModelsRaw(spark, dir))
     }
-  }
-
-  private val modelOpenCache = new java.util.LinkedHashMap[
-      (Int, String),
-      ((String, Long, Long), (Array[Array[Float]], Array[Array[Array[Float]]]))](
-      16, 0.75f, false) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (Int, String),
-        ((String, Long, Long), (Array[Array[Float]], Array[Array[Array[Float]]]))])
-        : Boolean = size() > 16
   }
 
   /** [[readIndexModels]] WITHOUT the maintenance-leftover guard — for the
@@ -1247,7 +1231,9 @@ object Similarity {
     * tree at the same path (the one mutation none of that covers) carries
     * a fresh manifest mtime — a different key, so it re-sniffs instead of
     * serving the predecessor's answer. Bounded: cleared wholesale past
-    * 4096 entries (indexes per driver). */
+    * 4096 entries (indexes per driver). Process-global, not a
+    * [[graft.SessionArtifacts]] entry: the answer is a property of the
+    * tree at (path, mtime), the same for every session that reads it. */
   private val ownerSniffCache =
     scala.collection.concurrent.TrieMap[String, Boolean]()
 

@@ -23,12 +23,8 @@ object KqlTextQueries {
 
   /** CSV dump of an events subset for the externaldata row — written once per
     * (session, sfDir); the timed body is the externaldata READ. */
-  private val externCsvCache = scala.collection.concurrent.TrieMap[String, String]()
   private def externCsv(s: SparkSession, d: String): String =
-    externCsvCache.getOrElseUpdate(s"${System.identityHashCode(s)}:$d", {
-      val path = s"/tmp/graft_extern/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    graft.SessionArtifacts.dir(s, "extern", d) { path =>
       import org.apache.spark.sql.functions._
       Tables.load(s, d, "events")
         .where(col("event_id") % 20 === 0)
@@ -36,8 +32,7 @@ object KqlTextQueries {
           floor(col("value")).cast("long").as("v"))
         .coalesce(1)
         .write.option("header", true).csv(path)
-      path
-    })
+    }
 
   val defs: Seq[QueryDef] = Seq(
 

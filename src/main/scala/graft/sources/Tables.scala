@@ -25,7 +25,7 @@ object Tables {
     * directly readable by Spark — we read them as nanos-since-epoch longs
     * (`spark.sql.legacy.parquet.nanosAsLong`) and truncate to µs timestamps, matching
     * DuckDB's ns→µs truncation so oracle comparisons agree. */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     // Memoized per (session, dir, table): `spark.read.parquet` re-lists the
     // path and re-reads the footer for schema inference on EVERY call
     // (measured 64–105 ms per call on the fixture tables), and a suite run
@@ -34,19 +34,9 @@ object Tables {
     // analyzed plan (schema + file index metadata, the temp-view posture);
     // every action still scans the parquet files. Source dirs are
     // read-only fixture tables by contract (mutated scratch dirs go
-    // through spark.read directly). Entries of stopped sessions are
-    // dropped on access, the session-cache convention.
-    loadCache.filterInPlace { case (_, (owner, _)) =>
-      try !owner.sparkContext.isStopped catch { case _: Throwable => false }
-    }
-    loadCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name),
-      (spark, buildLoad(spark, sfDir, name)))._2
-  }
-
-  private val loadCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(Int, String, String), (SparkSession, DataFrame)]
+    // through spark.read directly).
+    graft.SessionArtifacts.get(spark, "table", s"$sfDir/$name.parquet")(
+      buildLoad(spark, sfDir, name))
 
   private def buildLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -200,9 +200,8 @@ object StreamingIngest {
     * return the (static) result: real Structured Streaming execution — micro-batches,
     * state store, complete-mode memory sink — inside the batch driver contract, so
     * streaming results are oracle-checked like any other query. Memoized per
-    * (session, sink name): the stream runs once per session. */
-  private val streamCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+    * (session, sink name) in [[graft.SessionArtifacts]]: the stream runs once per
+    * session. */
   def runBoundedAggregation(spark: org.apache.spark.sql.SparkSession, sinkName: String,
                             agg: DataFrame): DataFrame =
     runBounded(spark, sinkName, agg, "complete")
@@ -214,27 +213,13 @@ object StreamingIngest {
     runBounded(spark, sinkName, deduped, "append")
 
   private def runBounded(spark: org.apache.spark.sql.SparkSession, sinkName: String,
-                         stream: DataFrame, mode: String): DataFrame = {
-    evictStale(spark)
-    streamCache.getOrElseUpdate(s"${System.identityHashCode(spark)}:$sinkName", {
+                         stream: DataFrame, mode: String): DataFrame =
+    graft.SessionArtifacts.get(spark, "stream", sinkName) {
       val q = stream.writeStream.format("memory").queryName(sinkName)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       spark.table(sinkName).persist()
-    })
-  }
-
-  /** Cache hygiene: entries are keyed by session identity; when a NEW session
-    * first runs a stream, every other session's entries are unpersisted and
-    * dropped — persisted results never outlive their session's useful life, and
-    * the cache stays bounded across long-lived multi-session processes. */
-  private def evictStale(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${System.identityHashCode(spark)}:"
-    streamCache.keys.filterNot(_.startsWith(prefix)).foreach { k =>
-      streamCache.remove(k).foreach(df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () })
     }
-  }
 }

@@ -1,13 +1,15 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import graft.functions.{Dedup, HostRank, Similarity}
+import graft.functions.Similarity
 
-/** Dev harness: COLD build cost of every memoized session artifact — the
-  * builds the driver bench no longer prices because the query registry
-  * amortizes them per (session, sf) like real index/build lifecycles
-  * (full-text index, pagerank rank table, minhash near-dup pipeline + CC
-  * labels, stored ANN index + its append/compact maintenance). BENCH_NOTES
+/** Dev harness: COLD build cost of the session artifacts — the builds the
+  * driver bench amortizes per (session, sf) like real index/build
+  * lifecycles. The artifacts of the query registry (full-text index,
+  * pagerank rank table, minhash near-dup pipeline + CC labels) are priced
+  * by running their owning queries once and printing the
+  * SessionArtifacts ledger; the stored ANN index lanes time its build and
+  * its append/compact/split/rebuild/merge maintenance directly. BENCH_NOTES
   * records one row per artifact per round from this harness so the
   * memoization pattern's spread stays priced (r13 verdict observation #1).
   * Usage: runMain graft.tools.BuildCosts [sfDir]
@@ -31,38 +33,22 @@ object BuildCosts {
       r
     }
     val root = java.nio.file.Files.createTempDirectory("graft_buildcost").toString
-    val docs = graft.sources.Tables.load(spark, sfDir, "documents")
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val corpus = emb.select(F.col("vec_id").as("corpus_id"), F.col("embedding"))
 
-    time("fulltext_index") {
-      graft.sources.FullTextIndex.build(docs, "doc_id", Seq("text"), s"$root/ftx")
+    // the session artifacts (full-text index, rank table, MinHash
+    // signatures, LSH candidates, verified pairs, CC labels), built by their
+    // owning queries on this fresh session. A query's cold wall time holds
+    // the first compute of the frames it persists; the ledger's build ms is
+    // the build closure alone (a persisted frame's construction).
+    Seq("q_search_indexed", "q_host_pagerank", "q_minhash_pairs",
+        "q_near_dedup_clusters").foreach { q =>
+      time(q)(graft.SparkEntry.queries(q)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
     }
-    time("pagerank_rank_table") {
-      // the q_host_pagerank fixture graph, verbatim
-      val hub = F.concat(F.lit("h"), (F.col("doc_id") % 23).cast("string"))
-      val edges = docs.select(F.col("source").as("src"), hub.as("dst"))
-        .union(docs.where(F.col("doc_id") % 3 === 0)
-          .select(hub.as("src"), F.col("lang").as("dst")))
-      HostRank.pageRank(edges, "src", "dst", iters = 3).count()
-    }
-    // the shared MinHash pipeline, with the query registry's persist points
-    val sigs = time("minhash_sigs") {
-      val s = Dedup.minHashSignatures(docs, "text", "doc_id",
-        numHashes = 64, shingleK = 3).persist()
-      s.count(); s
-    }
-    val cands = time("lsh_cands") {
-      val c = Dedup.lshCandidatePairs(sigs, 16, 4).persist()
-      c.count(); c
-    }
-    val nd = time("neardup_pairs_verify") {
-      val p = Dedup.estJaccard(cands, sigs, 64)
-        .where(F.col("est_jaccard") >= 0.5).persist()
-      p.count(); p
-    }
-    time("cc_labels") {
-      Dedup.connectedComponents(nd, "id_a", "id_b", docs, "doc_id").count()
+    graft.SessionArtifacts.ledger.foreach { case (kind, a) =>
+      println(f"[buildcost] artifact $kind%-18s builds=${a.builds} " +
+        f"hits=${a.hits} build_ms=${a.buildMs}%.0f")
     }
     val cents = time("ann_ivf_train") {
       Similarity.ivfTrain(corpus, "corpus_id", "embedding", 64)

@@ -18,6 +18,27 @@ class PlanAuditSpec extends SparkSpec {
       s"oracles without query: ${(o -- q).toSeq.sorted.mkString(", ")}")
   }
 
+  test("materializeAuto spreads by the plan root: joins spread, aggregate/limit roots do not") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.sql.functions._
+    def spreads(df: DataFrame): Boolean = {
+      val m = graft.functions.Caching.materializeAuto(df)
+      try m.queryExecution.logical.isInstanceOf[Repartition]
+      finally m.unpersist()
+    }
+    // one input split on local[4]: a data-sized binding must widen
+    val thin = spark.range(0, 1000, 1, 1).withColumn("k", col("id") % 10)
+    val small = thin.groupBy("k").agg(count(lit(1)).as("n"))
+    assert(spreads(thin), "a scan-rooted binding must spread")
+    assert(spreads(thin.join(broadcast(small), "k")),
+      "a scan joined to a small aggregate is data-sized and must spread")
+    assert(!spreads(small), "an Aggregate-rooted binding must not spread")
+    assert(!spreads(small.where(col("n") > 0).select(col("k")).as("s")),
+      "Project, Filter and SubqueryAlias above an Aggregate keep it bounded")
+    assert(!spreads(thin.limit(5)), "a GlobalLimit-rooted binding must not spread")
+  }
+
   test("q_where pushes its filters into the parquet scan") {
     val p = plan("q_where")
     assert(p.contains("PushedFilters: ["), s"no pushed filters in:\n$p")
