@@ -53,32 +53,26 @@ object Dedup {
   def portableHash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** MinHash universe: 2^31-1 (Mersenne prime). Affine coefficients stay below
-    * 2^31 so every `a*h + b` intermediate fits a 64-bit signed integer — no
-    * overflow in Spark OR in engines that error on overflow (DuckDB). */
-  val MinHashP = 2147483647L
-  def minhashA(i: Int): Long = ((i * 2654435761L + 1013904223L) % (MinHashP - 1)) + 1
-  def minhashB(i: Int): Long = (i * 2246822519L + 3266489917L) % MinHashP
+  /** MinHash universe P = 2^31-1 (Mersenne prime) and the affine coefficients of
+    * component i. Defined beside the kernel (graft.plans.MinHashSig); the DuckDB
+    * oracle builders read them here. */
+  val MinHashP: Long = graft.plans.MinHashSig.P
+  def minhashA(i: Int): Long = graft.plans.MinHashSig.a(i)
+  def minhashB(i: Int): Long = graft.plans.MinHashSig.b(i)
 
-  /** MinHash signature over a PRE-HASHED shingle array (values in [0, MinHashP)):
-    * component i = min over shingles of the affine permutation (a_i*h + b_i) mod p.
-    * Entirely codegen'd array expressions — per-row cost is O(#shingles × #hashes)
-    * with zero shuffle; deterministic (fixed coefficients, no RNG).
-    *
-    * Perf contract (as TextAnalysis.shinglesOf): `hashedShingles` must be a
-    * materialized attribute — inlining the md5 mapping here would re-evaluate it
-    * once per signature component (numHashes×). */
-  def minHashSignatureFromHashes(hashedShingles: Column, numHashes: Int = 128): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(hashedShingles,
-        h => (h * minhashA(i) + minhashB(i)) % MinHashP))): _*)
-
-  /** Convenience signature straight from shingle strings (fine for small/ad-hoc
-    * use and tests; pipelines must materialize the hashed array first — see
-    * minHashSignatureFromHashes perf contract). */
-  def minHashSignature(shingleSet: Column, numHashes: Int = 128): Column =
-    minHashSignatureFromHashes(
-      transform(shingleSet, s => portableHash60(s) % MinHashP), numHashes)
+  /** MinHash signature of a token-array column: component i = min over the
+    * distinct k-token shingles s of (a_i·(portableHash60(s) mod p) + b_i) mod p.
+    * Docs shorter than k (and null token arrays) count as one shingle, their
+    * whole ' '-join. One codegen'd kernel (graft.plans.MinHashSigExpr) makes one
+    * pass per row — no shingle strings, hash array or per-component lambda —
+    * built through ColumnBridge, so it needs no session extension; it is
+    * bit-identical to the column chain, which NativeExprSpec keeps as its
+    * oracle. `toks` may be any expression: the kernel evaluates it once. */
+  def minHashSignatureOf(toks: Column, shingleK: Int = 3, numHashes: Int = 128): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.plans.MinHashSigExpr(
+      ColumnBridge.expression(toks), shingleK, numHashes))
+  }
 
   /** LSH band keys: split a signature into `bands` bands of `signatureLen/bands` rows
     * and hash each band to ONE long (64-bit key — the band shuffle carries 8 bytes per
@@ -88,19 +82,17 @@ object Dedup {
     array((0 until bands).map(b =>
       xxhash64(lit(b), slice(signature, b * rowsPerBand + 1, rowsPerBand))): _*)
 
-  /** MinHash signature table: `(id, sig)` — the one (and only) pass over the corpus
-    * text. Each stage is a separate projection ON PURPOSE: tokens → shingles →
-    * signature. Inlining them re-evaluates the upstream expression once per lambda
-    * element AND once per hash seed (64×), which is catastrophically slow — see the
-    * perf contract on TextAnalysis.shinglesOf. */
+  /** MinHash signature table: `(id, sig)` — the one pass over the corpus text,
+    * one kernel projection per row (minHashSignatureOf over the lower-cased
+    * tokens). The narrow `(id, text)` input is widened first (Caching.spreadThin):
+    * a one-split source would otherwise compute every signature in one task. A
+    * wide or streaming input passes through unchanged, so the helper stays
+    * select-only on a stream. */
   def minHashSignatures(df: DataFrame, textCol: String, idCol: String,
                         numHashes: Int = 128, shingleK: Int = 3): DataFrame =
-    df.select(col(idCol).as("id"),
-        TextAnalysis.tokens(lower(col(textCol))).as("__toks"))
-      .select(col("id"), TextAnalysis.shinglesOf(col("__toks"), shingleK).as("__sh"))
-      .select(col("id"),
-        transform(col("__sh"), s => portableHash60(s) % MinHashP).as("__h"))
-      .select(col("id"), minHashSignatureFromHashes(col("__h"), numHashes).as("sig"))
+    Caching.spreadThin(df.select(col(idCol).as("id"), col(textCol).as("__t")))
+      .select(col("id"), minHashSignatureOf(
+        TextAnalysis.tokens(lower(col("__t"))), shingleK, numHashes).as("sig"))
 
   /** Candidate pair ids from a signature table via banded LSH. Only `(band_key, id)`
     * rides the shuffle (16 bytes/row); pairs are `distinct()`-ed HERE, before any
@@ -246,7 +238,8 @@ object Dedup {
     * Perf contract (as TextAnalysis.shinglesOf): `hashes` must be a materialized
     * attribute, not a nested transform(...) expression. */
   def simHashFromHashes(hashes: Column): Column =
-    if (nativeExprs) call_function(graft.plans.NativeExpressions.simhashName, hashes)
+    if (KqlFunctions.nativeFn(graft.plans.NativeExpressions.simhashName))
+      call_function(graft.plans.NativeExpressions.simhashName, hashes)
     else {
       // null parity with the native SimHash64 expression: null elements cast no
       // vote and the majority denominator counts non-null elements only
@@ -259,12 +252,6 @@ object Dedup {
         (c, i) => when(c * 2 > n, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
         lit(0L), (acc, v) => acc.bitwiseOR(v))
     }
-
-  /** True when the graft native expressions are registered in the active session. */
-  private def nativeExprs: Boolean =
-    try org.apache.spark.sql.SparkSession.active.catalog
-      .functionExists(graft.plans.NativeExpressions.simhashName)
-    catch { case _: Throwable => false }
 
   /** 64-bit SimHash of a token multiset (convenience wrapper; pipelines should
     * materialize the hash array first and call simHashFromHashes). Token hashes are

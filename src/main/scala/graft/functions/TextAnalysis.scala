@@ -130,7 +130,8 @@ object TextAnalysis {
   }
 
   /** Word k-shingles over an already-materialized token-array column (distinct), the
-    * MinHash input unit.
+    * MinHash input unit (the MinHash kernel, graft.plans.MinHashSig, hashes the same
+    * windows without building this array).
     *
     * IMPORTANT perf contract: pass an *attribute* (a column materialized by a previous
     * projection), not a nested split(...) expression — Catalyst inlines expression

@@ -553,11 +553,22 @@ case class ClosestPointOnLineExpr(first: Expression, second: Expression,
   * (no delimiter emitted for a null element). Docs with fewer than k
   * tokens produce an EMPTY array (the caller's `when(n >= k, …)` guard). */
 object SpanHashes {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
+  private[plans] val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-  private val SpaceByte = Array[Byte](' ')
+  private[plans] val SpaceByte = Array[Byte](' ')
+
+  /** portableHash60 of the bytes fed to `md` since its last reset: the
+    * first 8 md5 bytes as a big-endian long, shifted right by 4. Resets `md`. */
+  private[plans] def hash60(md: java.security.MessageDigest): Long = {
+    val d = md.digest()
+    val hi = ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
+      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
+      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
+    hi >>> 4
+  }
 
   def eval(toks: ArrayData, k: Int): ArrayData = {
     val n = toks.numElements()
@@ -577,12 +588,7 @@ object SpanHashes {
         }
         j += 1
       }
-      val d = md.digest()
-      val hi = ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-        ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-        ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-      out(i) = org.apache.spark.sql.catalyst.InternalRow(i, hi >>> 4)
+      out(i) = org.apache.spark.sql.catalyst.InternalRow(i, hash60(md))
       i += 1
     }
     new GenericArrayData(out)

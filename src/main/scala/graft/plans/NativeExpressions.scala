@@ -816,3 +816,102 @@ case class IvfProbesHierExpr(child: Expression, model: IvfPrunedModel,
     copy(child = c)
   override def prettyName: String = "graft_ivf_probes_hier"
 }
+
+/** The MinHash signature of a document's token array in one pass
+  * ([[MinHashSigExpr]], built by Dedup.minHashSignatureOf). It does the
+  * arithmetic of the column chain tokens → distinct k-shingles →
+  * portableHash60 % P → numHashes affine minima, without the shingle
+  * strings, the hash array or the per-component lambdas:
+  *   - windows are the n − k + 1 k-token runs joined by ' ' with concat_ws
+  *     null-skip (no delimiter for a null token); when n < k, the whole
+  *     array is the one window (TextAnalysis.shinglesOf), so null and empty
+  *     arrays hash "";
+  *   - each window's UTF-8 bytes stream into one thread-local md5
+  *     (portableHash60, as [[SpanHashes]]), reduced mod P;
+  *   - component i folds min over windows of (h·a_i + b_i) mod P into a
+  *     primitive long array. Min is idempotent, so repeated windows need no
+  *     distinct.
+  * The hash family lives here so the kernel and the DuckDB oracle builders
+  * (via Dedup.minhashA/minhashB) share one definition. */
+object MinHashSig {
+  /** 2^31 − 1. Coefficients stay below 2^31 so every h·a + b fits a signed
+    * 64-bit integer (h < P), in Spark and in engines that error on overflow. */
+  final val P = 2147483647L
+  def a(i: Int): Long = ((i * 2654435761L + 1013904223L) % (P - 1)) + 1
+  def b(i: Int): Long = (i * 2246822519L + 3266489917L) % P
+
+  def eval(toks: ArrayData, k: Int, ca: Array[Long], cb: Array[Long]): ArrayData = {
+    val m = ca.length
+    val sig = Array.fill(m)(Long.MaxValue)
+    val n = if (toks == null) 0 else toks.numElements()
+    val bytes = new Array[Array[Byte]](n)
+    var t = 0
+    while (t < n) {
+      if (!toks.isNullAt(t)) bytes(t) = toks.getUTF8String(t).getBytes
+      t += 1
+    }
+    val windows = if (n >= k) n - k + 1 else 1
+    val width = math.min(n, k)
+    val md = SpanHashes.digest.get()
+    var w = 0
+    while (w < windows) {
+      md.reset()
+      var j = w
+      var first = true
+      while (j < w + width) {
+        if (bytes(j) != null) {
+          if (!first) md.update(SpanHashes.SpaceByte)
+          md.update(bytes(j))
+          first = false
+        }
+        j += 1
+      }
+      val h = SpanHashes.hash60(md) % P
+      var i = 0
+      while (i < m) {
+        val v = (h * ca(i) + cb(i)) % P
+        if (v < sig(i)) sig(i) = v
+        i += 1
+      }
+      w += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+}
+
+/** graft_minhash_sig(tokens, k, numHashes) → array<bigint> of numHashes
+  * components ([[MinHashSig.eval]]). Same type as the column chain it
+  * replaces (`array(array_min(…), …)`: never null, nullable elements that
+  * are never null); a null token array gives the signature of "", as that
+  * chain does. graft-internal: constructed through ColumnBridge by
+  * Dedup.minHashSignatureOf, never via the function registry. */
+case class MinHashSigExpr(child: Expression, k: Int, numHashes: Int)
+    extends UnaryExpression {
+  require(k >= 1 && numHashes >= 1,
+    s"graft_minhash_sig needs k >= 1 and numHashes >= 1, got k=$k numHashes=$numHashes")
+  @transient private lazy val ca = Array.tabulate(numHashes)(MinHashSig.a)
+  @transient private lazy val cb = Array.tabulate(numHashes)(MinHashSig.b)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<string>, got $other")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    MinHashSig.eval(child.eval(input).asInstanceOf[ArrayData], k, ca, cb)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    val a = ctx.addReferenceObj("minhashA", ca, "long[]")
+    val b = ctx.addReferenceObj("minhashB", cb, "long[]")
+    ev.copy(isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral,
+      code = code"""
+        |${c.code}
+        |ArrayData ${ev.value} = graft.plans.MinHashSig.eval(
+        |  ${c.isNull} ? null : ${c.value}, $k, $a, $b);""".stripMargin)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+  override def prettyName: String = "graft_minhash_sig"
+}

@@ -233,9 +233,11 @@ object NorthStarQueries {
        |""".stripMargin
 
   // --- DuckDB oracle builders for the sketch pipelines -------------------------
-  // These reproduce TextAnalysis.tokens/shinglesOf and Dedup.portableHash60 /
-  // minHashSignatureFromHashes / simHashFromHashes verbatim in SQL, so the sketch
-  // rows get real hash-compared oracles instead of rows-only checks.
+  // These replay in SQL the column forms of the sketch kernels — for MinHash,
+  // the chain Dedup.minHashSignatureOf's kernel (graft.plans.MinHashSig) fuses:
+  // TextAnalysis.tokens/shinglesOf → Dedup.portableHash60 mod MinHashP → affine
+  // minima; and simHashFromHashes — so the sketch rows get real hash-compared
+  // oracles instead of rows-only checks.
 
   /** tokens → distinct 3-shingles → portable shingle hashes (mod MinHashP). */
   private val shingleHashCtes: String =

@@ -72,7 +72,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature is stable across partitionings (determinism at scale)") {
-    val one = Dedup.minHashSignature(TextAnalysis.shingles(col("text")), 16)
+    val one = Dedup.minHashSignatureOf(TextAnalysis.tokens(lower(col("text"))), 3, 16)
     val s1 = docs.repartition(1).select(one).collect().map(_.getSeq[Long](0)).toSet
     val s4 = docs.repartition(4).select(one).collect().map(_.getSeq[Long](0)).toSet
     assert(s1 == s4)

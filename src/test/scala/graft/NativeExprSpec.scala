@@ -499,4 +499,74 @@ class NativeExprSpec extends SparkSpec {
     val diff = df.select((hof === native).as("same")).filter(!col("same")).count()
     assert(diff == 0, "span dup stats native/HOF mismatch")
   }
+
+  test("minhash kernel equals the shingle/hash/lambda chain element for element") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans.MinHashSigExpr
+    // a small vocabulary, so windows repeat; "" is what a run of spaces
+    // splits into; multibyte and non-BMP (surrogate-pair) tokens
+    val word: Gen[String] = Gen.frequency(
+      6 -> Gen.oneOf("a", "b", "the", "café", "日本", "\uD83D\uDE00", "x\uD801\uDC37y"),
+      2 -> Gen.const(""),
+      1 -> Gen.const(null: String))
+    def toksFor(k: Int): Gen[Seq[String]] = Gen.frequency(
+      6 -> Gen.oneOf(0, k - 1, k, k + 1, 2 * k + 3).flatMap(n => Gen.listOfN(n, word)),
+      1 -> Gen.const(null: Seq[String]),
+      1 -> Gen.listOfN(k, word).map(w => Seq.fill(3)(w).flatten)) // repeated windows
+    val schema = StructType(Seq(StructField("i", IntegerType),
+      StructField("t", ArrayType(StringType, containsNull = true))))
+    for (k <- Seq(1, 2, 3, 5); numHashes <- Seq(1, 16, 128)) {
+      // no shrinking: the String shrinker cannot take the null tokens
+      val prop = Prop.forAllNoShrink(Gen.listOfN(24, toksFor(k))) { cases =>
+        val rows = cases.zipWithIndex.map { case (t, i) => Row(i, t) }
+        // an RDD source, not a LocalRelation: the kernel runs whole-stage
+        // codegen'd here, and interpreted (eval) below
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        val got = df.select(col("i"),
+          graft.functions.Dedup.minHashSignatureOf(col("t"), k, numHashes).as("sig"))
+        val want = MinHashOracles.signaturesOfTokens(df, "t", k, numHashes)
+        assert(got.schema("sig") == want.schema("sig"), "signature type diverged")
+        val w = want.collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+        got.collect().forall { r =>
+          val t = cases(r.getInt(0))
+          val data = if (t == null) null
+            else new GenericArrayData(t.map(x => if (x == null) null
+              else UTF8String.fromString(x)).toArray[Any])
+          val interpreted = MinHashSigExpr(Literal(data, schema("t").dataType), k,
+            numHashes).eval().asInstanceOf[ArrayData].toLongArray().toSeq
+          val ok = r.getSeq[Long](1) == w(r.getInt(0)) && interpreted == w(r.getInt(0))
+          if (!ok) info(s"k=$k numHashes=$numHashes diverged on $t")
+          ok
+        }
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(3), prop)
+      assert(res.passed, s"k=$k numHashes=$numHashes: ${res.status}")
+    }
+  }
+
+  test("minhash signatures equal the chain on null, empty, blank and fixture text") {
+    import graft.functions.Dedup
+    val edge = Seq[(Long, String)]((-1L, null), (-2L, ""), (-3L, "   "),
+      (-4L, "a  b   c"), (-5L, " lead and trail "), (-6L, "Ünïcödé \uD83D\uDE00 Text x"),
+      (-7L, "go go go go go go"), (-8L, "one"), (-9L, "two words"))
+      .toDF("doc_id", "text")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text")).unionByName(edge)
+    for ((k, numHashes) <- Seq(3 -> 128, 2 -> 16, 5 -> 1)) {
+      val got = Dedup.minHashSignatures(docs, "text", "doc_id", numHashes, k)
+        .as[(Long, Seq[Long])].collect().toMap
+      val want = MinHashOracles.signatures(docs, "text", "doc_id", numHashes, k)
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(got.size == docs.count() && got.keySet == want.keySet)
+      // null text: whatever the chain gives (a signature, not null)
+      assert(got(-1L) == want(-1L), s"null text diverged at k=$k")
+      val bad = got.collect { case (id, sig) if sig != want(id) => id }
+      assert(bad.isEmpty, s"k=$k numHashes=$numHashes diverged on ids ${bad.take(5)}")
+    }
+  }
 }

@@ -123,6 +123,34 @@ class PlanAuditSpec extends SparkSpec {
       s"span dedup produced a product join:\n$p")
   }
 
+  test("minhash signatures: one kernel projection, no lambdas, spread over the cores") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction}
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val src = spark.read.parquet(s"$sf/documents.parquet")
+    assert(src.rdd.getNumPartitions == 1, "the input must be one split")
+    val sigs = graft.functions.Dedup.minHashSignatures(src, "text", "doc_id")
+    // under AQE this runs the spread exchange and fixes the final plan
+    val tasks = sigs.queryExecution.toRdd.getNumPartitions
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val all = nodes(sigs.queryExecution.executedPlan)
+    val lambdas = all.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: LambdaFunction | _: ArrayTransform) => e }))
+    assert(lambdas.isEmpty, s"signature plan evaluates lambdas: ${lambdas.take(3)}")
+    assert(all.exists { case p: ProjectExec => p.projectList.exists(_.exists(
+      _.isInstanceOf[graft.plans.MinHashSigExpr])); case _ => false },
+      "no projection evaluates the MinHash kernel")
+    val sc = spark.sparkContext
+    val cores = "local\\[(\\d+)\\]".r.findFirstMatchIn(sc.master)
+      .map(_.group(1).toInt).getOrElse(sc.defaultParallelism)
+    assert(tasks >= math.min(cores, sc.defaultParallelism),
+      s"signature projection ran in $tasks tasks on $cores cores")
+  }
+
   test("semantic dedup: candidates only from the cluster-id equi-join, no product") {
     val p = plan("q_semantic_dedup")
     assert(p.contains("__cid"), s"cluster id absent from the physical plan:\n$p")
