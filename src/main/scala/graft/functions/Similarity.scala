@@ -175,7 +175,9 @@ object Similarity {
     * [[superGroups]] geometry ride the plan once per stage as a
     * primitive-array model (graft.plans.IvfPrunedModel); each row scores
     * the √k supers and exact-scores only the groups whose Cauchy–Schwarz
-    * bound can reach the top nProbe (graft.plans.IvfPruned). Built through
+    * bound can reach the top nProbe (graft.plans.IvfPruned): the row is
+    * read once into a double[], and one loop scores four centroids per
+    * pass over it, each dot summed left to right in double. Built through
     * ColumnBridge, so it needs no session extension. The matrix must be
     * non-empty, rectangular and finite: IvfPruned.validate names the first
     * row that is not. */
@@ -454,10 +456,13 @@ object Similarity {
     * and has cosine ≥ tau (keep-first, no connected components — each
     * removal is independently explainable by one kept witness).
     *
-    * 100 TB posture: candidate pairs come ONLY from the equi-join on the
-    * cluster id (the IVF-list analogue of LSH bands) — ×nProbe assignment
-    * rows, pair count bounded by cluster sizes, one cosine per DISTINCT
-    * surviving pair, no all-pairs stage. The trained centroid model is the
+    * 100 TB posture: candidate pairs come ONLY from shared cluster ids
+    * (the IVF-list analogue of LSH bands) — ×nProbe assignment rows,
+    * grouped by cluster id and paired within each cluster, pair count
+    * bounded by cluster sizes, one cosine per DISTINCT surviving pair, no
+    * all-pairs stage. The assignment is evaluated once per call (one stage
+    * runs the probe kernel, besides ivfTrain's), and each vector's norm
+    * once, so a pair costs one dot. The trained centroid model is the
     * only driver-side state (k×dim floats, ivfTrain's contract). Cluster
     * count must grow with the corpus (k ∝ n keeps cluster size and the
     * per-row pair budget constant — measured in SCALE.md); the
@@ -483,17 +488,31 @@ object Similarity {
     val assigned =
       if (hierAssign) assignProbesHier(keyed, "__id", "__v", centroids, nProbe)
       else assignProbes(keyed, "__id", "__v", centroids, nProbe)
-    val a = assigned.select(col("__cid"), col("__id").as("__id_a"))
-    val b = assigned.select(col("__cid"), col("__id").as("__id_b"))
-    // ids-only pair dedup BEFORE the cosine (the lshCandidatePairs contract:
-    // two shared clusters must not score the pair twice)
-    val cand = a.join(b, Seq("__cid")).filter(col("__id_a") < col("__id_b"))
-      .select(col("__id_a"), col("__id_b")).distinct()
-    val vecs = corpus.select(col(idCol).as("__jid"), col(vecCol).as("__jv"))
+    // the assignment is evaluated ONCE: each cluster's ids, sorted, then
+    // every later id of the list paired with each id (positions i < j) —
+    // the pairs a cluster-id self-join would give, without a second
+    // evaluation of the probe kernel on its other side. ids-only pair
+    // dedup BEFORE the cosine (the lshCandidatePairs contract: two shared
+    // clusters must not score the pair twice); a < b also drops the pairs
+    // of a duplicated id with itself
+    val lists = assigned.groupBy(col("__cid"))
+      .agg(array_sort(collect_list(col("__id"))).as("__ids"))
+    val cand = lists
+      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "__id_a")))
+      .select(col("__id_a"), explode(slice(col("__ids"), col("__pa") + 2,
+        size(col("__ids")) - col("__pa") - 1)).as("__id_b"))
+      .filter(col("__id_a") < col("__id_b"))
+      .distinct()
+    // each vector's norm once, where it is attached: a pair then pays one
+    // dot, and dot/(na·nb) is the cosine formula bit for bit
+    val vecs = corpus.select(col(idCol).as("__jid"), col(vecCol).as("__jv"),
+      norm(col(vecCol)).as("__jn"))
     val removedIds = cand
-      .join(vecs.select(col("__jid").as("__id_a"), col("__jv").as("__va")), Seq("__id_a"))
-      .join(vecs.select(col("__jid").as("__id_b"), col("__jv").as("__vb")), Seq("__id_b"))
-      .filter(cosine(col("__va"), col("__vb")) >= tau)
+      .join(vecs.select(col("__jid").as("__id_a"), col("__jv").as("__va"),
+        col("__jn").as("__na")), Seq("__id_a"))
+      .join(vecs.select(col("__jid").as("__id_b"), col("__jv").as("__vb"),
+        col("__jn").as("__nb")), Seq("__id_b"))
+      .filter(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")) >= tau)
       .select(col("__id_b").as("__rid")).distinct()
     corpus.select(col(idCol))
       .join(removedIds, col(idCol) === col("__rid"), "left")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the similarity/dedup hot loops.
@@ -459,6 +459,8 @@ case class IvfPrunedModel(cents: Array[Array[Float]], biases: Array[Double],
     supers: Array[Array[Float]], radii: Array[Double],
     minb: Array[Double], maxb: Array[Double], members: Array[Array[Int]],
     sbiases: Array[Double]) {
+  /** Length of every centroid and super row. */
+  def dim: Int = cents(0).length
   // the expression's treeString embeds its args: print geometry, not arrays
   override def toString: String =
     s"IvfPrunedModel(k=${cents.length}, " +
@@ -493,7 +495,11 @@ case class IvfPrunedModel(cents: Array[Array[Float]], biases: Array[Double],
   * whose UPPER bound is < t cannot hold a top-nProbe centroid and its
   * members are skipped without scoring. Per-row cost falls from k dots to
   * √k super dots + the surviving groups' members; a single group is the
-  * flat scan. A small slack keeps the
+  * flat scan. On structureless (Gaussian) vectors no group is dropped and
+  * every row scores all k centroids (SCALE.md), so the scoring loop sets
+  * the cost: the row is read once into a double[] ([[rowOf]]) and
+  * [[dotsInto]] scores four centroids per pass over it, for the supers,
+  * the candidates and the hierarchical ladder alike. A small slack keeps the
   * cut conservative under floating-point rounding (extra survivors are
   * merely scored exactly; droppees are proven strictly beaten). Non-finite
   * vectors (NaN/Inf elements) disable pruning for that row and take the
@@ -527,6 +533,11 @@ object IvfPruned {
     validate(cents)
     val k = cents.length
     val g = supers.length
+    supers.indices.foreach { i =>
+      require(supers(i) != null && supers(i).length == cents(0).length &&
+        supers(i).forall(java.lang.Float.isFinite),
+        s"IvfPruned: super row $i is not ${cents(0).length} finite elements")
+    }
     val biases = new Array[Double](k)
     var i = 0
     while (i < k) {
@@ -548,8 +559,7 @@ object IvfPruned {
       members(gi)(fill(gi)) = i; fill(gi) += 1
       val s = supers(gi); val c = cents(i)
       var d2 = 0.0; var j = 0
-      val n = math.min(s.length, c.length)
-      while (j < n) { val dd = c(j).toDouble - s(j).toDouble; d2 += dd * dd; j += 1 }
+      while (j < c.length) { val dd = c(j).toDouble - s(j).toDouble; d2 += dd * dd; j += 1 }
       if (d2 > rad2(gi)) rad2(gi) = d2
       if (biases(i) < minb(gi)) minb(gi) = biases(i)
       if (biases(i) > maxb(gi)) maxb(gi) = biases(i)
@@ -567,202 +577,220 @@ object IvfPruned {
       members, sbiases)
   }
 
-  /** Fused two-level (hierarchical) probe assignment — the kernel form of
-    * Similarity.assignProbesHier's ladder (explode top-groupProbe supers →
-    * broadcast member join → per-row top-nProbe): the CANDIDATE SET, score
-    * chain, and both tie-breaks replicate the ladder exactly (supers scored
-    * v·s − |s|²/2 with ties to the lower group id — the flat kernel's
-    * comparator; members scored v·c − |c|²/2 with ties to the lower cid),
-    * so the output is row-identical; only the explode + join + typed
-    * aggregate machinery is gone. Like the ladder, the result is
-    * recall-approximate vs flat (groupProbe = #groups degenerates to exact
-    * flat, asserted in SimilaritySpec). Emits min(nProbe, candidates)
-    * probes — the ladder's TopKAgg posture when a probed frontier holds
-    * fewer than nProbe centroids. */
-  def evalHier(vec: org.apache.spark.sql.catalyst.util.ArrayData,
-      m: IvfPrunedModel, nProbe: Int, groupProbe: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  /** The row vector as a primitive array, read from the row once: every
+    * element in order, a null element as 0.0. Centroid and super rows are
+    * finite ([[build]] checks), so a 0.0 element adds ±0.0 to a dot (which starts at +0.0 and so is never
+    * −0.0) and 0.0 to Σx²: the same sums as skipping the element. */
+  def rowOf(vec: ArrayData): Array[Double] = {
     val nv = vec.numElements()
-    def dotTo(c: Array[Float]): Double = {
-      val n = math.min(nv, c.length)
-      var s = 0.0; var p = 0
+    val v = new Array[Double](nv)
+    var j = 0
+    while (j < nv) {
+      if (!vec.isNullAt(j)) v(j) = vec.getFloat(j).toDouble
+      j += 1
+    }
+    v
+  }
+
+  /** The one scoring loop: out(r) = Σ v(p)·rows(r)(p) over the common
+    * prefix p < min(|v|, dim), in double, left to right, for r < nRows.
+    * Four rows share each pass over v; each keeps its own accumulator, so
+    * every sum equals the one-row loop's bit for bit. */
+  private def dotsInto(v: Array[Double], dim: Int, rows: Array[Array[Float]],
+      nRows: Int, out: Array[Double]): Unit = {
+    val n = math.min(v.length, dim)
+    var r = 0
+    while (r + 4 <= nRows) {
+      val c0 = rows(r); val c1 = rows(r + 1); val c2 = rows(r + 2); val c3 = rows(r + 3)
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var p = 0
       while (p < n) {
-        if (!vec.isNullAt(p)) s += vec.getFloat(p).toDouble * c(p).toDouble
+        val x = v(p)
+        s0 += x * c0(p); s1 += x * c1(p); s2 += x * c2(p); s3 += x * c3(p)
         p += 1
       }
-      s
+      out(r) = s0; out(r + 1) = s1; out(r + 2) = s2; out(r + 3) = s3
+      r += 4
     }
+    while (r < nRows) {
+      val c = rows(r)
+      var s = 0.0; var p = 0
+      while (p < n) { s += v(p) * c(p); p += 1 }
+      out(r) = s
+      r += 1
+    }
+  }
+
+  /** v·c − |c|²/2 for each listed centroid, in list order. */
+  private def scoresOf(v: Array[Double], m: IvfPrunedModel,
+      ids: Array[Int]): Array[Double] = {
+    val nc = ids.length
+    val rows = new Array[Array[Float]](nc)
+    var q = 0
+    while (q < nc) { rows(q) = m.cents(ids(q)); q += 1 }
+    val scores = new Array[Double](nc)
+    dotsInto(v, m.dim, rows, nc, scores)
+    q = 0
+    while (q < nc) { scores(q) -= m.biases(ids(q)); q += 1 }
+    scores
+  }
+
+  /** The nOut best scored candidates, best first: Double.compare (NaN
+    * largest), ties to the LOWER centroid id — made explicit because
+    * candidates come group by group, not in ascending-id order. */
+  private def topProbes(ids: Array[Int], scores: Array[Double],
+      nOut: Int): GenericArrayData = {
+    val nc = ids.length
+    val out = new Array[Any](nOut)
+    val taken = new Array[Boolean](nc)
+    var r = 0
+    while (r < nOut) {
+      var bi = -1
+      var bs = Double.NegativeInfinity
+      var bcid = Int.MaxValue
+      var i = 0
+      while (i < nc) {
+        if (!taken(i)) {
+          val cmp = java.lang.Double.compare(scores(i), bs)
+          if (bi < 0 || cmp > 0 || (cmp == 0 && ids(i) < bcid)) {
+            bi = i; bs = scores(i); bcid = ids(i)
+          }
+        }
+        i += 1
+      }
+      taken(bi) = true
+      out(r) = ids(bi)
+      r += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The centroids [[eval]] exact-scores for row v ([[rowOf]]), group by
+    * group: the members of every group whose upper bound reaches the
+    * threshold (the nProbe-th largest group lower bound, less the FP
+    * slack). Every centroid, in id order, when the bound cannot prune: a
+    * non-finite row, nProbe outside [1, k), or a NaN super dot. Its length
+    * over k is the row's scored-centroid fraction. */
+  def candidates(v: Array[Double], m: IvfPrunedModel, nProbe: Int): Array[Int] = {
+    val k = m.cents.length
+    val g = m.supers.length
+    // |v| over every element: valid for the bound even when the vector is
+    // longer than the centroids (the dot truncates to the common prefix,
+    // whose norm is ≤ the full norm)
+    var vn2 = 0.0
+    var j = 0
+    while (j < v.length) { vn2 += v(j) * v(j); j += 1 }
+    val vnorm = math.sqrt(vn2)
+    if (!java.lang.Double.isFinite(vnorm) || g < 1 || nProbe < 1 || nProbe >= k)
+      return Array.range(0, k)
+    val sdots = new Array[Double](g)
+    dotsInto(v, m.dim, m.supers, g, sdots)
+    val lbs = new Array[Double](g)
+    val ubs = new Array[Double](g)
+    var gi = 0
+    while (gi < g) {
+      if (java.lang.Double.isNaN(sdots(gi))) return Array.range(0, k)
+      val rad = vnorm * m.radii(gi)
+      ubs(gi) = sdots(gi) + rad - m.minb(gi)
+      lbs(gi) = sdots(gi) - rad - m.maxb(gi)
+      gi += 1
+    }
+    var t = Double.NegativeInfinity
+    if (g >= nProbe) {
+      val sorted = lbs.clone()
+      java.util.Arrays.sort(sorted)
+      t = sorted(g - nProbe)
+    }
+    // conservative under FP rounding: a borderline group survives and is
+    // scored exactly; only groups proven strictly beaten are dropped
+    val thr = t - 1e-6 * (1.0 + math.abs(t))
+    var nc = 0
+    gi = 0
+    while (gi < g) {
+      if (ubs(gi) >= thr) nc += m.members(gi).length
+      gi += 1
+    }
+    val ids = new Array[Int](nc)
+    var w = 0
+    gi = 0
+    while (gi < g) {
+      if (ubs(gi) >= thr) {
+        val mem = m.members(gi)
+        System.arraycopy(mem, 0, ids, w, mem.length)
+        w += mem.length
+      }
+      gi += 1
+    }
+    ids
+  }
+
+  /** The exact flat probes of one row: [[candidates]], then one
+    * [[dotsInto]] pass over them, then the top nProbe. */
+  def eval(vec: ArrayData, m: IvfPrunedModel, nProbe: Int): GenericArrayData = {
+    val v = rowOf(vec)
+    val ids = candidates(v, m, nProbe)
+    topProbes(ids, scoresOf(v, m, ids), math.min(math.max(nProbe, 0), m.cents.length))
+  }
+
+  /** The members of the groupProbe best super-groups, best group first
+    * (supers scored v·s − |s|²/2, Double.compare, ties to the lower group
+    * id) — the candidate set of [[evalHier]]. */
+  def hierCandidates(v: Array[Double], m: IvfPrunedModel, groupProbe: Int): Array[Int] = {
     val g = m.supers.length
     val ng = math.min(math.max(groupProbe, 0), g)
     val sScores = new Array[Double](g)
+    dotsInto(v, m.dim, m.supers, g, sScores)
     var gi = 0
-    while (gi < g) { sScores(gi) = dotTo(m.supers(gi)) - m.sbiases(gi); gi += 1 }
-    // top-ng groups: the flat selection (Double.compare, strict >,
-    // ascending scan → ties to the lower gid)
+    while (gi < g) { sScores(gi) -= m.sbiases(gi); gi += 1 }
+    // top-ng groups: the flat selection (strict >, ascending scan → ties
+    // to the lower gid)
     val gTaken = new Array[Boolean](g)
     val gSel = new Array[Int](ng)
-    var r = 0
     var nc = 0
+    var r = 0
     while (r < ng) {
       var best = -1
       var bs = Double.NegativeInfinity
-      var i2 = 0
-      while (i2 < g) {
-        if (!gTaken(i2) &&
-            (best < 0 || java.lang.Double.compare(sScores(i2), bs) > 0)) {
-          best = i2; bs = sScores(i2)
+      var i = 0
+      while (i < g) {
+        if (!gTaken(i) &&
+            (best < 0 || java.lang.Double.compare(sScores(i), bs) > 0)) {
+          best = i; bs = sScores(i)
         }
-        i2 += 1
+        i += 1
       }
       gTaken(best) = true
       gSel(r) = best
       nc += m.members(best).length
       r += 1
     }
-    val candIds = new Array[Int](nc)
-    val scores = new Array[Double](nc)
+    val ids = new Array[Int](nc)
     var w = 0
     r = 0
     while (r < ng) {
-      val mem = m.members(gSel(r)); var q = 0
-      while (q < mem.length) {
-        val ci = mem(q)
-        candIds(w) = ci
-        scores(w) = dotTo(m.cents(ci)) - m.biases(ci)
-        w += 1; q += 1
-      }
+      val mem = m.members(gSel(r))
+      System.arraycopy(mem, 0, ids, w, mem.length)
+      w += mem.length
       r += 1
     }
-    val nOut = math.min(math.max(nProbe, 0), nc)
-    val out = new Array[Any](nOut)
-    val taken = new Array[Boolean](nc)
-    r = 0
-    while (r < nOut) {
-      var bi = -1
-      var bs = Double.NegativeInfinity
-      var bcid = Int.MaxValue
-      var i2 = 0
-      while (i2 < nc) {
-        if (!taken(i2)) {
-          val cmp = java.lang.Double.compare(scores(i2), bs)
-          if (bi < 0 || cmp > 0 || (cmp == 0 && candIds(i2) < bcid)) {
-            bi = i2; bs = scores(i2); bcid = candIds(i2)
-          }
-        }
-        i2 += 1
-      }
-      taken(bi) = true
-      out(r) = candIds(bi)
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    ids
   }
 
-  def eval(vec: org.apache.spark.sql.catalyst.util.ArrayData,
-      m: IvfPrunedModel, nProbe: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val k = m.cents.length
-    val nv = vec.numElements()
-    // |v| over non-null elements: valid for the bound even when a centroid
-    // is shorter (the dot truncates to the common prefix, whose norm is ≤
-    // the full vector norm)
-    var vn2 = 0.0
-    var j = 0
-    while (j < nv) {
-      if (!vec.isNullAt(j)) { val x = vec.getFloat(j).toDouble; vn2 += x * x }
-      j += 1
-    }
-    val vnorm = math.sqrt(vn2)
-    def dotTo(c: Array[Float]): Double = {
-      val n = math.min(nv, c.length)
-      var s = 0.0; var p = 0
-      while (p < n) {
-        if (!vec.isNullAt(p)) s += vec.getFloat(p).toDouble * c(p).toDouble
-        p += 1
-      }
-      s
-    }
-    val g = m.supers.length
-    var candIds: Array[Int] = null
-    if (java.lang.Double.isFinite(vnorm) && g >= 1 && nProbe >= 1 &&
-        nProbe < k) {
-      val lbs = new Array[Double](g)
-      val ubs = new Array[Double](g)
-      var ok = true
-      var gi = 0
-      while (gi < g && ok) {
-        val vs = dotTo(m.supers(gi))
-        if (java.lang.Double.isNaN(vs)) ok = false
-        else {
-          val rad = vnorm * m.radii(gi)
-          ubs(gi) = vs + rad - m.minb(gi)
-          lbs(gi) = vs - rad - m.maxb(gi)
-        }
-        gi += 1
-      }
-      if (ok) {
-        var t = Double.NegativeInfinity
-        if (g >= nProbe) {
-          val sorted = lbs.clone()
-          java.util.Arrays.sort(sorted)
-          t = sorted(g - nProbe)
-        }
-        // conservative under FP rounding: a borderline group survives and is
-        // scored exactly; only groups proven strictly beaten are dropped
-        val thr = t - 1e-6 * (1.0 + math.abs(t))
-        var nc = 0
-        gi = 0
-        while (gi < g) {
-          if (ubs(gi) >= thr) nc += m.members(gi).length
-          gi += 1
-        }
-        candIds = new Array[Int](nc)
-        var w = 0
-        gi = 0
-        while (gi < g) {
-          if (ubs(gi) >= thr) {
-            val mem = m.members(gi); var q = 0
-            while (q < mem.length) { candIds(w) = mem(q); w += 1; q += 1 }
-          }
-          gi += 1
-        }
-      }
-    }
-    if (candIds == null) candIds = Array.range(0, k) // exact full scan
-    val nc = candIds.length
-    val scores = new Array[Double](nc)
-    var q = 0
-    while (q < nc) {
-      val ci = candIds(q)
-      scores(q) = dotTo(m.cents(ci)) - m.biases(ci)
-      q += 1
-    }
-    // selection: Double.compare (NaN largest), ties to the LOWER centroid
-    // id — made explicit because candidates are grouped, not in
-    // ascending-cid order
-    val nOut = math.min(math.max(nProbe, 0), k)
-    val out = new Array[Any](nOut)
-    val taken = new Array[Boolean](nc)
-    var r = 0
-    while (r < nOut) {
-      var bi = -1
-      var bs = Double.NegativeInfinity
-      var bcid = Int.MaxValue
-      var i2 = 0
-      while (i2 < nc) {
-        if (!taken(i2)) {
-          val cmp = java.lang.Double.compare(scores(i2), bs)
-          if (bi < 0 || cmp > 0 || (cmp == 0 && candIds(i2) < bcid)) {
-            bi = i2; bs = scores(i2); bcid = candIds(i2)
-          }
-        }
-        i2 += 1
-      }
-      taken(bi) = true
-      out(r) = candIds(bi)
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  /** Fused two-level (hierarchical) probe assignment — the kernel form of
+    * Similarity.assignProbesHier's ladder (explode top-groupProbe supers →
+    * broadcast member join → per-row top-nProbe): the CANDIDATE SET
+    * ([[hierCandidates]]), score chain, and both tie-breaks replicate the
+    * ladder exactly, so the output is row-identical; only the explode +
+    * join + typed aggregate machinery is gone. Like the ladder, the result
+    * is recall-approximate vs flat (groupProbe = #groups degenerates to
+    * exact flat, asserted in SimilaritySpec). Emits min(nProbe, candidates)
+    * probes — the ladder's TopKAgg posture when a probed frontier holds
+    * fewer than nProbe centroids. */
+  def evalHier(vec: ArrayData, m: IvfPrunedModel, nProbe: Int,
+      groupProbe: Int): GenericArrayData = {
+    val v = rowOf(vec)
+    val ids = hierCandidates(v, m, groupProbe)
+    topProbes(ids, scoresOf(v, m, ids), math.min(math.max(nProbe, 0), ids.length))
   }
 }
 

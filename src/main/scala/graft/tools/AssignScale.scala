@@ -1,7 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import graft.functions.Similarity
+import graft.plans.IvfPruned
 
 /** Dev harness: measure the two IVF assignment paths — exact bound-pruned
   * assignment (Similarity.assignProbes) and the recall-approximate
@@ -9,7 +11,10 @@ import graft.functions.Similarity
   * what the √k ladder still buys over exact assignment. Both paths spread
   * their input to all cores internally, so the comparison measures the
   * paths, not scan parallelism. Prints steady-state (run 2) execution
-  * seconds AND the plan-build wall time per path. Usage:
+  * seconds AND the plan-build wall time per path, and each path's
+  * scored-centroid fraction: the centroids it exact-scores per row over k,
+  * averaged over the rows (IvfPruned.candidates / hierCandidates; 1.00
+  * means the bound pruned nothing). Usage:
   *   runMain graft.tools.AssignScale <sfDir> [k1,k2,...] [nProbe] [paths]
   * `paths` (csv of pruned,hier; default both) selects which paths to time.
   */
@@ -39,6 +44,8 @@ object AssignScale {
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .select(F.col("vec_id"), F.col("embedding"))
     emb.persist(); val n = emb.count()
+    val rows = emb.select(F.col("embedding")).collect().filter(!_.isNullAt(0))
+      .map(r => IvfPruned.rowOf(new GenericArrayData(r.getSeq[Float](0).toArray[Any])))
     val nProbe = nProbeArg
     ks.foreach { k =>
       // synthetic deterministic centroids: this measures the ASSIGNMENT
@@ -57,19 +64,27 @@ object AssignScale {
         }
         (tBuild, t)
       }
+      // the model both paths build (default super-group training)
+      val (supers, gid) = Similarity.superGroups(cents)
+      val model = IvfPruned.build(cents, supers, gid)
+      def scored(ids: Array[Double] => Array[Int]): Double =
+        rows.map(ids(_).length.toDouble).sum / (rows.length.toDouble * k)
       val pruned =
         if (!paths("pruned")) "not measured"
         else {
           val (pb, pt) = steady(() => Similarity.assignProbes(
             emb, "vec_id", "embedding", cents, nProbe))
-          f"build=$pb%.2fs steady=$pt%.2fs"
+          val f = scored(IvfPruned.candidates(_, model, nProbe))
+          f"build=$pb%.2fs steady=$pt%.2fs scored=$f%.2f"
         }
       val hier =
         if (!paths("hier")) "not measured"
         else {
           val (hb, ht) = steady(() => Similarity.assignProbesHier(
             emb, "vec_id", "embedding", cents, nProbe))
-          f"build=$hb%.2fs steady=$ht%.2fs"
+          // assignProbesHier's default groupProbe
+          val f = scored(IvfPruned.hierCandidates(_, model, 3))
+          f"build=$hb%.2fs steady=$ht%.2fs scored=$f%.2f"
         }
       println(s"[assignscale] n=$n k=$k pruned: $pruned | hier: $hier")
     }

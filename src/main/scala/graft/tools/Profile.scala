@@ -6,9 +6,13 @@ import org.apache.spark.sql.SparkSession
   * Uses the noop sink (same methodology as Bench); pass -explain to dump plans
   * to stdout, or -plandir=<dir> [-suffix=<tag>] to write each query's
   * explain("formatted") to <dir>/<name>_<tag>.txt (the plans/r18 evidence
-  * convention). -nN sets runs per query. Each run rebuilds the DataFrame (no
-  * AQE stage reuse); plan-construction time (Catalyst analysis) is reported
-  * separately from execution so per-query overhead is attributable. */
+  * convention). A q_streaming_* row's DataFrame only reads the memoized
+  * sink, so for those rows the file also holds the plans of the SQL
+  * executions that ran while the row was built (the micro-batches), from
+  * the session's SQL status store. -nN sets runs per query. Each run
+  * rebuilds the DataFrame (no AQE stage reuse); plan-construction time
+  * (Catalyst analysis) is reported separately from execution so per-query
+  * overhead is attributable. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
@@ -28,6 +32,10 @@ object Profile {
     spark.sparkContext.setLogLevel("WARN")
     graft.Warmup.run(spark)
     names.foreach { name =>
+      val streaming = name.startsWith("q_streaming_")
+      val lastExec =
+        if (streaming) org.apache.spark.sql.graftbridge.ExecutionPlans.lastId(spark)
+        else -1L
       val tb0 = System.nanoTime()
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val built = (System.nanoTime() - tb0) / 1e9
@@ -38,10 +46,15 @@ object Profile {
       println(f"[$name] build=$built%.2fs plan=$planned%.2fs")
       if (explain) println(planTxt)
       planDir.foreach { dir =>
+        val ran =
+          if (!streaming) ""
+          else org.apache.spark.sql.graftbridge.ExecutionPlans.after(spark, lastExec)
+            .map { case (id, desc, plan) => s"\n=== execution $id: $desc\n$plan" }
+            .mkString
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$dir/${name}_$suffix.txt"),
-          planTxt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          (planTxt + ran).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       (1 to runs).foreach { i =>
         // -cold replicates Bench's pass hygiene: materialize barriers are

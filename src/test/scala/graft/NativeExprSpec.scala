@@ -342,20 +342,35 @@ class NativeExprSpec extends SparkSpec {
 
   test("ivf probes kernel equals the reference scan on non-finite, null and tied inputs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
     import graft.plans.{IvfProbesPrunedExpr, IvfPruned}
     // few distinct values, so duplicate centroids and exact score ties occur
     val finite = Gen.oneOf(-1f, -0.5f, 0f, 0.5f, 1f, 2f)
-    val elem: Gen[java.lang.Float] = Gen.frequency(
-      12 -> finite.map(x => x: java.lang.Float),
-      1 -> Gen.const(Float.NaN: java.lang.Float),
-      1 -> Gen.const(Float.PositiveInfinity: java.lang.Float),
-      1 -> Gen.const(Float.NegativeInfinity: java.lang.Float),
-      1 -> Gen.const(null: java.lang.Float))
+    val special: Gen[java.lang.Float] = Gen.oneOf(Float.NaN: java.lang.Float,
+      Float.PositiveInfinity: java.lang.Float, Float.NegativeInfinity: java.lang.Float,
+      null: java.lang.Float)
+    val elem: Gen[java.lang.Float] =
+      Gen.frequency(12 -> finite.map(x => x: java.lang.Float), 4 -> special)
     val dim = 6
+    // lengths around the centroid dim (the dot truncates to the common
+    // prefix), and specials placed at the first and last element of the
+    // prefix, mid-prefix and just past the prefix
     val vec: Gen[Array[java.lang.Float]] = Gen.frequency(
-      8 -> Gen.listOfN(dim, elem).map(_.toArray),
+      8 -> (for {
+        len <- Gen.oneOf(0, 1, dim - 1, dim, dim + 1, dim + 3)
+        base <- Gen.listOfN(len, elem)
+        marks <- Gen.someOf(0, 3, 4, dim - 1, dim)
+        sp <- Gen.listOfN(marks.size, special)
+      } yield {
+        val a = base.toArray
+        marks.zip(sp).foreach { case (p, x) => if (p < len) a(p) = x }
+        a
+      }),
       1 -> Gen.const(Array.fill[java.lang.Float](dim)(0f)),
       1 -> Gen.const(null: Array[java.lang.Float]))
     val vecType = ArrayType(FloatType, containsNull = true)
@@ -364,29 +379,62 @@ class NativeExprSpec extends SparkSpec {
         distinct <- Gen.choose(1, math.min(k, 40))
         base <- Gen.listOfN(distinct, Gen.listOfN(dim, finite).map(_.toArray))
         picks <- Gen.listOfN(k, Gen.choose(0, distinct - 1))
-        nProbe <- Gen.oneOf(0, 1, k, k + 1)
-        vecs <- Gen.listOfN(6, vec)
+        nProbe <- Gen.oneOf(0, 1, 2, k, k + 1)
+        vecs <- Gen.listOfN(8, vec)
       } yield (picks.map(i => base(i).clone()).toArray, nProbe, vecs)
-    Seq(1 -> 40, 2 -> 40, 32 -> 30, 2080 -> 6).foreach { case (k, runs) =>
+    def arrayOf(v: Array[java.lang.Float]): ArrayData =
+      if (v == null) null else new GenericArrayData(v.map(x => x: Any))
+    // a failing case names its inputs (arrays would print as identities)
+    def show(v: Array[_]): String = if (v == null) "null" else v.mkString("[", ",", "]")
+    def failing(nProbe: Int, centroids: Array[Array[Float]], v: Array[java.lang.Float]) =
+      s"nProbe=$nProbe vector=${show(v)} centroids=${centroids.map(show).mkString(",")}"
+    // every remainder of the four-centroid block: k mod 4 ∈ {1, 2, 3, 1, 0, 0}
+    Seq(1 -> 40, 2 -> 40, 3 -> 40, 5 -> 40, 32 -> 30, 2080 -> 6).foreach { case (k, runs) =>
       val prop = Prop.forAll(caseFor(k)) { case (centroids, nProbe, vecs) =>
         // the model Similarity.ivfProbes builds
         val (supers, gid) = graft.functions.Similarity.superGroups(centroids)
         val model = IvfPruned.build(centroids, supers, gid)
         val cents = IvfOracles.arrayData(centroids)
-        vecs.forall { v =>
-          val data = if (v == null) null
-            else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-              v.map(x => x: Any))
+        val bad = vecs.find { v =>
+          val data = arrayOf(v)
           val got = IvfProbesPrunedExpr(Literal(data, vecType), model, nProbe)
             .eval(null)
-          if (data == null) got == null
-          else got.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-            .toIntArray().toSeq == IvfOracles.probes(data, cents, nProbe).array.toSeq
+          if (data == null) got != null
+          else got.asInstanceOf[ArrayData]
+            .toIntArray().toSeq != IvfOracles.probes(data, cents, nProbe).array.toSeq
         }
+        bad.isEmpty :| failing(nProbe, centroids, bad.orNull)
       }
       val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(runs), prop)
       assert(res.passed, s"k=$k: ${res.status}")
     }
+    // the whole-stage codegen'd path through the session at k = 2080, over
+    // an RDD source (a LocalRelation would be folded on the driver)
+    val schema = StructType(Seq(StructField("i", IntegerType), StructField("v", vecType)))
+    val codegen = Prop.forAllNoShrink(caseFor(2080), Gen.listOfN(24, vec)) {
+      case ((centroids, nProbe, _), vecs) =>
+        val rows = vecs.zipWithIndex.map { case (v, i) =>
+          Row(i, if (v == null) null else v.toSeq) }
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+          .select(col("i"),
+            graft.functions.Similarity.ivfProbes(col("v"), centroids, nProbe).as("p"))
+        val fused = df.queryExecution.executedPlan.collect {
+          case w: WholeStageCodegenExec => w.child.collect {
+            case p: ProjectExec => p.projectList.exists(_.exists(
+              _.isInstanceOf[IvfProbesPrunedExpr]))
+          }.exists(identity)
+        }.exists(identity)
+        val cents = IvfOracles.arrayData(centroids)
+        val bad = df.collect().find { r =>
+          val data = arrayOf(vecs(r.getInt(0)))
+          if (data == null) !r.isNullAt(1)
+          else r.getSeq[Int](1) != IvfOracles.probes(data, cents, nProbe).array.toSeq
+        }.map(r => vecs(r.getInt(0)))
+        (fused :| "the kernel is not in a whole-stage codegen'd projection") &&
+          (bad.isEmpty :| failing(nProbe, centroids, bad.orNull))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(4), codegen)
+    assert(res.passed, s"codegen'd k=2080: ${res.status}")
   }
 
   test("ivf probe models reject null, ragged and non-finite centroid rows by index") {
@@ -405,6 +453,13 @@ class NativeExprSpec extends SparkSpec {
     val empty = intercept[IllegalArgumentException](
       graft.functions.Similarity.ivfProbes(col("v"), Array.empty[Array[Float]], 1))
     assert(empty.getMessage.contains("no rows"), empty.getMessage)
+    // super rows: the scoring loop reads a null vector element as 0.0, which
+    // equals skipping it only against finite rows of the centroids' length
+    Seq(Array(Array(0.5f)), Array(Array(Float.NaN, 0.5f))).foreach { supers =>
+      val e = intercept[IllegalArgumentException](
+        graft.plans.IvfPruned.build(good, supers, Array(0, 0)))
+      assert(e.getMessage.contains("super row 0 is not 2 finite elements"), e.getMessage)
+    }
   }
 
   test("ivf probes over equal centroid matrices build sameResult plans") {
@@ -502,6 +557,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("minhash kernel equals the shingle/hash/lambda chain element for element") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}

@@ -151,11 +151,39 @@ class PlanAuditSpec extends SparkSpec {
       s"signature projection ran in $tasks tasks on $cores cores")
   }
 
-  test("semantic dedup: candidates only from the cluster-id equi-join, no product") {
+  test("semantic dedup: candidates only from shared cluster ids, no product") {
     val p = plan("q_semantic_dedup")
     assert(p.contains("__cid"), s"cluster id absent from the physical plan:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"semantic dedup fell back to a product join:\n$p")
+  }
+
+  test("semantic dedup evaluates the probe kernel in exactly one stage") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import graft.functions.Similarity
+    val emb = Tables.load(spark, sf, "embeddings")
+    // a trained model keeps ivfTrain's own assignment out of the plan
+    val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", 64,
+      nCentroids = 16, iters = 1)
+    // tau 0 removes some rows: an empty removal set would let adaptive
+    // execution replace the stages that ran with an empty relation
+    val out = Similarity.semDedup(emb, "vec_id", "embedding", 64, 0.0,
+      nCentroids = 16, trained = Some(cents))
+    // under AQE this fixes the final plan
+    assert(out.collect().exists(_.getBoolean(1)), "no row was removed")
+    // every stage that runs, once: a reused exchange or stage is not entered
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: ReusedExchangeExec => Nil
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val probing = nodes(out.queryExecution.executedPlan).filter(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.plans.IvfProbesPrunedExpr])))
+    assert(probing.size == 1, s"the probe kernel runs in ${probing.size} " +
+      s"operators:\n${probing.map(_.simpleString(200)).mkString("\n")}")
   }
 
   test("dsir: model joins broadcast, scores partial-aggregate, no product") {

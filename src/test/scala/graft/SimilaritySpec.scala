@@ -2053,6 +2053,51 @@ class SimilaritySpec extends SparkSpec {
       s"filtered serve lost dynamic partition pruning:\n$plan")
   }
 
+  test("semDedup removes exactly the reference set at k = 32 and k = 2080") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    // Gaussian vectors (where the bound prunes nothing), exact and near
+    // copies, and a null vector (never assigned, never removed)
+    val rnd = new scala.util.Random(17)
+    val dim = 16
+    val base = Array.fill(500)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+    val near = Array.tabulate(40)(i =>
+      base(i * 7).map(x => x + 1e-2f * rnd.nextGaussian().toFloat))
+    val copies = Array.tabulate(10)(i => base(i * 11).clone())
+    val vecs = (base ++ near ++ copies).zipWithIndex.map { case (v, i) => (i.toLong, v) } :+
+      (9999L, null.asInstanceOf[Array[Float]])
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(vecs.toSeq, 3))
+      .toDF("id", "v")
+    def dotD(a: Array[Float], b: Array[Float]): Double = {
+      var s = 0.0; var i = 0
+      while (i < math.min(a.length, b.length)) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
+    }
+    val tau = 0.9
+    for (k <- Seq(32, 2080)) {
+      val cents = Array.fill(k)(Array.fill(dim)(rnd.nextGaussian().toFloat))
+      val centData = IvfOracles.arrayData(cents)
+      // reference: pairs a < b sharing one of their 2 nearest clusters
+      // (flat scan), the later id removed when the cosine reaches tau
+      val probes = vecs.filter(_._2 != null).map { case (id, v) =>
+        (id, v, IvfOracles.probes(new GenericArrayData(v.map(x => x: Any)), centData, 2)
+          .toIntArray().toSet)
+      }
+      val want = (for {
+        (a, va, pa) <- probes.iterator
+        (b, vb, pb) <- probes.iterator
+        if a < b && (pa & pb).nonEmpty &&
+          dotD(va, vb) / (math.sqrt(dotD(va, va)) * math.sqrt(dotD(vb, vb))) >= tau
+      } yield b).toSet
+      val out = Similarity.semDedup(df, "id", "v", dim, tau, nCentroids = k,
+        nProbe = 2, trained = Some(cents))
+      assert(out.count() == vecs.length, s"k=$k: one output row per input row")
+      val got = out.where(col("removed")).select("id").as[Long].collect().toSet
+      assert(want.size >= 40, s"k=$k: the reference found only ${want.size}")
+      assert(got == want, s"k=$k: only-kernel=${(got -- want).take(5)}, " +
+        s"only-reference=${(want -- got).take(5)}")
+    }
+  }
+
   test("bound-pruned assignment is set-exact vs the table path") {
     val emb = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
