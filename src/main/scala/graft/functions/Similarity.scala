@@ -235,21 +235,32 @@ object Similarity {
     * assignment rows — the frame form of [[ivfProbes]] that semDedup,
     * ivfTopK and the index paths assign through. A projection: every row
     * assigns on its own (ids need not be unique), and a null vector yields
-    * no rows. The input is spread across the cores first ([[spreadWide]]),
-    * since the probe work per row grows with k. */
+    * no rows. `withVec` also carries each row's vector, as `vecCol`, next
+    * to its `__cid` (semDedup scores the clusters from it). The input is
+    * spread across the cores first ([[spreadWide]]), since the probe work
+    * per row grows with k. */
   def assignProbes(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Float]], nProbe: Int): DataFrame =
+      centroids: Array[Array[Float]], nProbe: Int,
+      withVec: Boolean = false): DataFrame =
     spreadWide(df.select(col(idCol), col(vecCol).as("__av")))
-      .select(col(idCol),
-        explode(ivfProbes(col("__av"), centroids, nProbe)).as("__cid"))
+      .select(Seq(col(idCol),
+        explode(ivfProbes(col("__av"), centroids, nProbe)).as("__cid")) ++
+        carried(withVec, vecCol): _*)
+
+  /** The vector column an assignment carries when asked to. */
+  private def carried(withVec: Boolean, vecCol: String): Seq[Column] =
+    if (withVec) Seq(col("__av").as(vecCol)) else Nil
 
   /** Spread a thin input across the cluster before a heavy per-row
     * projection: a narrow scan (one parquet file) would otherwise run the
     * whole k-scaled probe stream on one core. Wide inputs (the 100 TB
-    * case) already parallelize and skip the shuffle. */
+    * case) already parallelize and skip the shuffle. The partition count
+    * is read from the plan's own RDD: `rows.rdd` would plan the query a
+    * second time under a row deserializer (~30 ms a call). */
   private def spreadWide(rows: DataFrame): DataFrame = {
     val par = rows.sparkSession.sparkContext.defaultParallelism
-    if (rows.rdd.getNumPartitions >= par) rows else rows.repartition(par)
+    if (rows.queryExecution.toRdd.getNumPartitions >= par) rows
+    else rows.repartition(par)
   }
 
   /** Deterministic driver-side Lloyd's k-means over a MODEL-sized point set
@@ -415,11 +426,12 @@ object Similarity {
     * in an unprobed group is missed — the standard IVF-of-IVF trade;
     * groupProbe = k2 degenerates to EXACT flat assignment, unit-anchored).
     * Near-dup pairs still meet: ε-perturbed copies compute the same probe
-    * sets within the perturbation margin. */
+    * sets within the perturbation margin. `withVec` carries the vector as
+    * in [[assignProbes]]. */
   def assignProbesHier(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]], nProbe: Int,
       groupProbe: Int = 3, kmIters: Int = 5,
-      sampleCap: Int = 4096): DataFrame = {
+      sampleCap: Int = 4096, withVec: Boolean = false): DataFrame = {
     require(nProbe >= 1, "assignProbesHier: nProbe must be >= 1")
     require(groupProbe >= 1, "assignProbesHier: groupProbe must be >= 1")
     // group structure from the shared [[superGroups]] helper: sampled
@@ -442,30 +454,42 @@ object Similarity {
     val rows = df.where(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).as("__av"))
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    spreadWide(rows).select(col(idCol),
+    spreadWide(rows).select(Seq(col(idCol),
       explode(ColumnBridge.column(graft.plans.IvfProbesHierExpr(
         ColumnBridge.expression(col("__av")), model,
-        nProbe, math.min(groupProbe, probeSupers.length)))).as("__cid"))
+        nProbe, math.min(groupProbe, probeSupers.length)))).as("__cid")) ++
+      carried(withVec, vecCol): _*)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023: near-dup
     * removal by EMBEDDING similarity inside coarse clusters — catches
     * paraphrases and templated rewrites that MinHash's lexical shingles
-    * miss). Deterministic contract: a vector is REMOVED when any vector
-    * with a SMALLER id shares one of its `nProbe` nearest coarse clusters
-    * and has cosine ≥ tau (keep-first, no connected components — each
-    * removal is independently explainable by one kept witness).
+    * miss). Deterministic, row-level contract: a vector is REMOVED when
+    * another vector of a SMALLER id shares one of its `nProbe` nearest
+    * coarse clusters and has cosine ≥ tau (keep-first, no connected
+    * components — each removal is independently explainable by one kept
+    * witness in the same cluster). Only the two vectors of a pair are
+    * compared: a repeated id's other vectors are not its witnesses unless
+    * they share the cluster themselves. An output row's `removed` is true
+    * when any vector of its id was removed. The cosine is
+    * dot/(|a|·|b|) in double (dot left to right over the common prefix,
+    * null elements skipped), compared with Spark's double ordering, so a
+    * NaN cosine removes; a pair with |a|·|b| = 0 (a zero, empty or
+    * all-null vector) is never a duplicate. Null vectors join no cluster
+    * and are never removed.
     *
-    * 100 TB posture: candidate pairs come ONLY from shared cluster ids
-    * (the IVF-list analogue of LSH bands) — ×nProbe assignment rows,
-    * grouped by cluster id and paired within each cluster, pair count
-    * bounded by cluster sizes, one cosine per DISTINCT surviving pair, no
-    * all-pairs stage. The assignment is evaluated once per call (one stage
-    * runs the probe kernel, besides ivfTrain's), and each vector's norm
-    * once, so a pair costs one dot. The trained centroid model is the
-    * only driver-side state (k×dim floats, ivfTrain's contract). Cluster
-    * count must grow with the corpus (k ∝ n keeps cluster size and the
-    * per-row pair budget constant — measured in SCALE.md); the
+    * 100 TB posture: candidates come ONLY from shared cluster ids (the
+    * IVF-list analogue of LSH bands), with no all-pairs stage. The
+    * assignment is evaluated once per call (one stage runs the probe
+    * kernel, besides ivfTrain's) and carries each row's vector; each
+    * cluster's members are collected into one list and scored in place by
+    * one codegen'd kernel (graft.plans.ClusterDupes: each member read and
+    * normed once, at most m(m−1)/2 dots for m members), which returns only
+    * the removed ids — no pair rows, pair shuffle or vector join. A
+    * cluster's m² work runs in one task, so the cluster count must grow
+    * with the corpus (k ∝ n keeps cluster size and the per-row pair budget
+    * constant — measured in SCALE.md). The trained centroid model is the
+    * only driver-side state (k×dim floats, ivfTrain's contract). The
     * assignment runs through [[assignProbes]], one exact bound-pruned
     * projection at every k whose plan size does not grow with k
     * (q_semantic_dedup runs it at k = 64, q_semantic_dedup_bigk at
@@ -486,37 +510,27 @@ object Similarity {
     // sides compute the SAME probe sets within the perturbation margin).
     val keyed = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
     val assigned =
-      if (hierAssign) assignProbesHier(keyed, "__id", "__v", centroids, nProbe)
-      else assignProbes(keyed, "__id", "__v", centroids, nProbe)
-    // the assignment is evaluated ONCE: each cluster's ids, sorted, then
-    // every later id of the list paired with each id (positions i < j) —
-    // the pairs a cluster-id self-join would give, without a second
-    // evaluation of the probe kernel on its other side. ids-only pair
-    // dedup BEFORE the cosine (the lshCandidatePairs contract: two shared
-    // clusters must not score the pair twice); a < b also drops the pairs
-    // of a duplicated id with itself
-    val lists = assigned.groupBy(col("__cid"))
-      .agg(array_sort(collect_list(col("__id"))).as("__ids"))
-    val cand = lists
-      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "__id_a")))
-      .select(col("__id_a"), explode(slice(col("__ids"), col("__pa") + 2,
-        size(col("__ids")) - col("__pa") - 1)).as("__id_b"))
-      .filter(col("__id_a") < col("__id_b"))
+      if (hierAssign) assignProbesHier(keyed, "__id", "__v", centroids, nProbe,
+        withVec = true)
+      else assignProbes(keyed, "__id", "__v", centroids, nProbe, withVec = true)
+    // the assignment is evaluated ONCE; a vector removed from two shared
+    // clusters comes out twice, hence the distinct
+    val removedIds = assigned.groupBy(col("__cid"))
+      .agg(collect_list(struct(col("__id"), col("__v"))).as("__m"))
+      .select(explode(clusterDupes(col("__m"), tau)).as("__rid"))
       .distinct()
-    // each vector's norm once, where it is attached: a pair then pays one
-    // dot, and dot/(na·nb) is the cosine formula bit for bit
-    val vecs = corpus.select(col(idCol).as("__jid"), col(vecCol).as("__jv"),
-      norm(col(vecCol)).as("__jn"))
-    val removedIds = cand
-      .join(vecs.select(col("__jid").as("__id_a"), col("__jv").as("__va"),
-        col("__jn").as("__na")), Seq("__id_a"))
-      .join(vecs.select(col("__jid").as("__id_b"), col("__jv").as("__vb"),
-        col("__jn").as("__nb")), Seq("__id_b"))
-      .filter(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")) >= tau)
-      .select(col("__id_b").as("__rid")).distinct()
     corpus.select(col(idCol))
       .join(removedIds, col(idCol) === col("__rid"), "left")
       .select(col(idCol), col("__rid").isNotNull.as("removed"))
+  }
+
+  /** The ids one cluster's member list `array<struct<id, v>>` removes under
+    * semDedup's contract (graft.plans.ClusterDupes). Built through
+    * ColumnBridge, so it needs no session extension. */
+  private[graft] def clusterDupes(members: Column, tau: Double): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.plans.ClusterDupesExpr(
+      ColumnBridge.expression(members), tau))
   }
 
   // ------------------------------------------------------------------

@@ -845,6 +845,142 @@ case class IvfProbesHierExpr(child: Expression, model: IvfPrunedModel,
   override def prettyName: String = "graft_ivf_probes_hier"
 }
 
+/** SemDeDup's in-cluster scoring ([[ClusterDupesExpr]], built by
+  * Similarity.semDedup over each cluster's `collect_list(struct(id, v))`):
+  * the ids of the members that a member with a smaller id in the same
+  * cluster reaches tau against. Row-level: a pair is one member against
+  * another of the SAME list, never another vector of the same id.
+  *   - each member is read once into a primitive double[] (with a null
+  *     mask when it has null elements), and its norm computed once, as the
+  *     sqrt of its self-dot;
+  *   - a pair dot is the DotF32 sum: left to right in double over the
+  *     common prefix, skipping an index where either side is null (a 0.0
+  *     there would turn 0·±Inf into NaN);
+  *   - a pair (a, b) counts when id a < id b in the id type's Catalyst
+  *     ordering (equal ids never pair);
+  *   - b is removed when dot/(na·nb) ≥ tau under Spark's double ordering
+  *     (NaN largest, so a NaN cosine removes); a pair with na·nb = 0 is not
+  *     a duplicate — the value a non-ANSI session's division gives.
+  * Members are visited in id order and b's search stops at its first
+  * witness, so at most m(m−1)/2 pairs are scored. A null member, id or
+  * vector takes part in no pair. */
+object ClusterDupes {
+  def eval(members: ArrayData, idType: DataType, ord: Ordering[Any],
+      tau: Double): GenericArrayData = {
+    val n = members.numElements()
+    val ids = new Array[Any](n)
+    val vs = new Array[Array[Double]](n)
+    val masks = new Array[Array[Boolean]](n)
+    val norms = new Array[Double](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!members.isNullAt(i)) {
+        val r = members.getStruct(i, 2)
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val a = r.getArray(1)
+          val len = a.numElements()
+          val v = new Array[Double](len)
+          var mask: Array[Boolean] = null
+          var j = 0
+          while (j < len) {
+            if (a.isNullAt(j)) {
+              if (mask == null) mask = new Array[Boolean](len)
+              mask(j) = true
+            } else v(j) = a.getFloat(j).toDouble
+            j += 1
+          }
+          ids(m) = r.get(0, idType); vs(m) = v; masks(m) = mask
+          norms(m) = math.sqrt(dot(v, mask, v, mask))
+          m += 1
+        }
+      }
+      i += 1
+    }
+    // ascending id order; `lead` is the first position of q's id, so the
+    // members before it are exactly those with a smaller id
+    val order = Array.range(0, m).sortBy(ids(_))(ord)
+    val out = new Array[Any](m)
+    var nOut = 0
+    var lead = 0
+    var q = 1
+    while (q < m) {
+      val b = order(q)
+      if (ord.compare(ids(order(q - 1)), ids(b)) != 0) lead = q
+      var p = 0
+      var hit = false
+      while (!hit && p < lead) {
+        val a = order(p)
+        val den = norms(a) * norms(b)
+        if (den != 0.0) {
+          val c = dot(vs(a), masks(a), vs(b), masks(b)) / den
+          hit = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(c, tau) >= 0
+        }
+        p += 1
+      }
+      if (hit) {
+        out(nOut) = org.apache.spark.sql.catalyst.InternalRow.copyValue(ids(b))
+        nOut += 1
+      }
+      q += 1
+    }
+    new GenericArrayData(out.take(nOut))
+  }
+
+  /** Σ x·y over the common prefix, left to right in double, skipping an
+    * index where either mask (null: no null element) is set. */
+  private def dot(x: Array[Double], xm: Array[Boolean], y: Array[Double],
+      ym: Array[Boolean]): Double = {
+    val n = math.min(x.length, y.length)
+    var s = 0.0
+    var p = 0
+    if (xm == null && ym == null)
+      while (p < n) { s += x(p) * y(p); p += 1 }
+    else
+      while (p < n) {
+        if ((xm == null || !xm(p)) && (ym == null || !ym(p))) s += x(p) * y(p)
+        p += 1
+      }
+    s
+  }
+}
+
+/** graft_cluster_dupes(members) → the removed ids of one cluster
+  * ([[ClusterDupes.eval]]); members is `array<struct<id, v: array<float>>>`
+  * with an orderable id type, and the result is `array<id>`. graft-internal:
+  * constructed through ColumnBridge by Similarity.semDedup. */
+case class ClusterDupesExpr(child: Expression, tau: Double) extends UnaryExpression {
+  private def idType: DataType = child.dataType match {
+    case ArrayType(s: StructType, _) if s.length == 2 => s(0).dataType
+    case _ => NullType
+  }
+  @transient private lazy val ordering =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(s: StructType, _) if s.length == 2 &&
+        s(1).dataType.isInstanceOf[ArrayType] &&
+        s(1).dataType.asInstanceOf[ArrayType].elementType == FloatType =>
+      org.apache.spark.sql.catalyst.util.TypeUtils.checkForOrderingExpr(idType, prettyName)
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<struct<id, v: array<float>>>, got $other")
+  }
+  override def dataType: DataType = ArrayType(idType, containsNull = false)
+  override protected def nullSafeEval(v: Any): Any =
+    ClusterDupes.eval(v.asInstanceOf[ArrayData], idType, ordering, tau)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("memberIdType", idType,
+      "org.apache.spark.sql.types.DataType")
+    val o = ctx.addReferenceObj("memberIdOrdering", ordering, "scala.math.Ordering")
+    // the exact bits of tau, NaN and ±Inf included
+    val tauCode =
+      s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(tau)}L)"
+    defineCodeGen(ctx, ev, v => s"graft.plans.ClusterDupes.eval($v, $t, $o, $tauCode)")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+  override def prettyName: String = "graft_cluster_dupes"
+}
+
 /** The MinHash signature of a document's token array in one pass
   * ([[MinHashSigExpr]], built by Dedup.minHashSignatureOf). It does the
   * arithmetic of the column chain tokens → distinct k-shingles →

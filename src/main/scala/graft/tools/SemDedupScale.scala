@@ -10,9 +10,12 @@ import graft.sources.Tables
   * per-row pair budget, constant). Runs Similarity.semDedup on the base
   * fixture and on a ScaleUp'd directory with k scaled by the same factor,
   * steady-state timing (run 2 of 2), and prints rows/removed/time so the
-  * SCALE.md row is reproducible. An optional 4th arg `hier` runs the
-  * SCALED leg through the two-level assignment (semDedup(hierAssign=true))
-  * — the end-to-end form of the assignment-stage decomposition. Usage:
+  * SCALE.md row is reproducible, with the cluster shape the in-cluster
+  * kernel sees: the largest cluster m_max (its m² work runs in one task)
+  * and Σ m(m−1)/2 over the clusters, the most pairs the kernel scores.
+  * An optional 4th arg `hier` runs the SCALED leg through the two-level
+  * assignment (semDedup(hierAssign=true)) — the end-to-end form of the
+  * assignment-stage decomposition. Usage:
   *   runMain graft.tools.SemDedupScale <baseDir> <scaledDir> <factor> [hier]
   */
 object SemDedupScale {
@@ -47,7 +50,16 @@ object SemDedupScale {
           .where(F.col("removed")).count()
         t = (System.nanoTime() - t0) / 1e9
       }
-      println(f"[semscale] dir=$dir k=$k hier=$hier n=$n removed=$removed steady=$t%.2fs")
+      // the assignment semDedup scores (its default nProbe = 2)
+      val sizes = (if (hier) Similarity.assignProbesHier(emb, "vec_id", "embedding",
+          centroids, 2)
+        else Similarity.assignProbes(emb, "vec_id", "embedding", centroids, 2))
+        .groupBy("__cid").count()
+        .agg(F.max("count"), F.sum(F.col("count") * (F.col("count") - 1) / 2))
+        .head()
+      println(f"[semscale] dir=$dir k=$k hier=$hier n=$n removed=$removed " +
+        f"steady=$t%.2fs max_cluster=${sizes.getLong(0)} " +
+        f"pairs=${sizes.getDouble(1)}%.0f")
     }
     one(base, 64, hier = false)
     one(scaled, 64 * factor, hier = hierScaled)

@@ -437,6 +437,138 @@ class NativeExprSpec extends SparkSpec {
     assert(res.passed, s"codegen'd k=2080: ${res.status}")
   }
 
+  test("cluster dupes kernel equals the pair plan on non-finite, null, ragged and repeated-id members") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.types._
+    import graft.plans.ClusterDupesExpr
+    type Member = (java.lang.Long, Array[java.lang.Float])
+    // few distinct values, so exact copies, zero dots and ties occur
+    val finite = Gen.oneOf(-1f, -0.5f, 0f, 0.5f, 1f, 2f).map(x => x: java.lang.Float)
+    val special: Gen[java.lang.Float] = Gen.frequency(
+      1 -> Gen.const(Float.NaN: java.lang.Float),
+      2 -> Gen.oneOf(Float.PositiveInfinity: java.lang.Float,
+        Float.NegativeInfinity: java.lang.Float),
+      3 -> Gen.const(null: java.lang.Float))
+    val dim = 4
+    // members of one cluster are copies of its template with up to two of
+    // the ends (positions 0 and dim − 1) replaced, so specials of two
+    // members meet at one index (a null against ±Inf); then fresh, shorter
+    // and longer, zero, all-null and null vectors
+    def vecOf(template: Array[java.lang.Float], w: Int): Gen[Array[java.lang.Float]] =
+      Gen.frequency(
+        10 -> (for {
+          ends <- Gen.someOf(0, dim - 1)
+          xs <- Gen.listOfN(ends.size, Gen.frequency(4 -> finite, w -> special))
+        } yield {
+          val v = template.clone()
+          ends.zip(xs).foreach { case (p, x) => v(p) = x }
+          v
+        }),
+        2 -> Gen.listOfN(dim, finite).map(_.toArray),
+        2 -> Gen.oneOf(0, 1, dim - 1, dim + 2).flatMap(n =>
+          Gen.listOfN(n, Gen.frequency(4 -> finite, w -> special)).map(_.toArray)),
+        1 -> Gen.const(Array.fill[java.lang.Float](dim)(0f)),
+        1 -> Gen.const(Array.fill[java.lang.Float](dim)(null)),
+        1 -> Gen.const(null: Array[java.lang.Float]))
+    // ids drawn from 0..m repeat, and a few are null
+    def clusterOf(c: Int, m: Int, w: Int): Gen[List[Member]] =
+      if (m == 0) Gen.const(Nil)
+      else for {
+        template <- Gen.listOfN(dim, finite).map(_.toArray)
+        vs <- Gen.listOfN(m, vecOf(template, w))
+        ids <- Gen.listOfN(m, Gen.frequency(20 -> Gen.choose(0L, m.toLong)
+          .map(i => (c * 1000L + i): java.lang.Long), 1 -> Gen.const(null: java.lang.Long)))
+      } yield ids.zip(vs)
+    // two copies of one vector that differ at one index only, where each
+    // holds a special: a null against ±Inf decides such a pair
+    def collision(c: Int): Gen[List[Member]] = for {
+      template <- Gen.listOfN(dim, finite).map(_.toArray)
+      p <- Gen.choose(0, dim - 1)
+      xs <- Gen.listOfN(2, special)
+      ids <- Gen.listOfN(2, Gen.choose(0L, 2L).map(i => (c * 1000L + i): java.lang.Long))
+    } yield ids.zip(xs).map { case (id, x) =>
+      val v = template.clone(); v(p) = x; (id, v)
+    }
+    // every case holds each size; special-free cases keep the 150-member
+    // cluster from being all removed by a NaN member with a small id
+    val sizes = Seq(0, 1, 2, 5, 5, 5, 5, 150)
+    val caseGen = for {
+      w <- Gen.oneOf(0, 4)
+      clusters <- Gen.sequence[List[List[Member]], List[Member]](
+        sizes.zipWithIndex.map { case (m, c) => clusterOf(c, m, w) } ++
+          (sizes.length until sizes.length + 4).map(collision))
+      tauSel <- Gen.oneOf(-1.0, 0.5, 0.9, 1.0, Double.NaN) // NaN: an exact cosine
+    } yield (clusters, tauSel)
+    def dotD(a: Array[java.lang.Float], b: Array[java.lang.Float]): Double = {
+      var s = 0.0; var i = 0
+      while (i < math.min(a.length, b.length)) {
+        if (a(i) != null && b(i) != null) s += a(i).toDouble * b(i).toDouble
+        i += 1
+      }
+      s
+    }
+    // the cosine of the last two usable members of the 150-member cluster,
+    // so a pair meets tau exactly
+    def exactTau(clusters: List[List[Member]]): Double =
+      clusters(sizes.length - 1).filter(_._2 != null).takeRight(2) match {
+        case List((_, a), (_, b)) =>
+          val den = math.sqrt(dotD(a, a)) * math.sqrt(dotD(b, b))
+          if (den != 0.0 && !(dotD(a, b) / den).isNaN) dotD(a, b) / den else 0.9
+        case _ => 0.9
+      }
+    val vecType = ArrayType(FloatType, containsNull = true)
+    val membersType = ArrayType(StructType(Seq(StructField("id", LongType),
+      StructField("v", vecType))), containsNull = false)
+    def dataOf(ms: List[Member]): ArrayData = new GenericArrayData(ms.map { case (id, v) =>
+      new GenericInternalRow(Array[Any](id,
+        if (v == null) null else new GenericArrayData(v.map(x => x: Any))))
+    }.toArray[Any])
+    def show(v: Array[_]): String = if (v == null) "null" else v.mkString("[", ",", "]")
+    val schema = StructType(Seq(StructField("c", IntegerType), StructField("m", membersType)))
+    val prop = Prop.forAllNoShrink(caseGen) { case (clusters, tauSel) =>
+      val tau = if (tauSel.isNaN) exactTau(clusters) else tauSel
+      val interpreted = clusters.map(ms => ClusterDupesExpr(Literal(dataOf(ms), membersType),
+        tau).eval().asInstanceOf[ArrayData].toLongArray().toSet)
+      // whole-stage codegen'd, over an RDD source
+      val rows = clusters.zipWithIndex.map { case (ms, c) =>
+        Row(c, ms.map { case (id, v) => Row(id, if (v == null) null else v.toSeq) }) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        .select(col("c"), graft.functions.Similarity.clusterDupes(col("m"), tau).as("r"))
+      val fused = df.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w.child.collect {
+          case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[ClusterDupesExpr]))
+        }.exists(identity)
+      }.exists(identity)
+      val codegen = df.collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toSet).toMap
+      // the pair plan, keyed by member: the row-level contract
+      val flat = clusters.zipWithIndex.flatMap { case (ms, c) => ms.map(m => (c, m)) }
+        .zipWithIndex.map { case ((c, (id, v)), key) =>
+          Row(key.toLong, id, c, if (v == null) null else v.toSeq) }
+      val members = spark.createDataFrame(spark.sparkContext.parallelize(flat, 2),
+        StructType(Seq(StructField("__key", LongType), StructField("__id", LongType),
+          StructField("__cid", IntegerType), StructField("__v", vecType))))
+      val oracle = SemDedupOracles.removedIds(members.select("__key", "__id", "__cid"),
+        members.select("__key", "__v"), tau).collect().map(_.getLong(0)).toSet
+      val bad = clusters.indices.find { c =>
+        val want = oracle.filter(_ / 1000 == c)
+        interpreted(c) != want || codegen(c) != want
+      }
+      (fused :| "the kernel is not in a whole-stage codegen'd projection") &&
+        (bad.isEmpty :| bad.map { c =>
+          s"tau=$tau cluster=$c interpreted=${interpreted(c)} codegen=${codegen(c)} " +
+            s"pairPlan=${oracle.filter(_ / 1000 == c)} members=" +
+            clusters(c).map { case (id, v) => s"$id:${show(v)}" }.mkString(" ")
+        }.getOrElse(""))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(16), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("ivf probe models reject null, ragged and non-finite centroid rows by index") {
     val good = Array(Array(1f, 0f), Array(0f, 1f))
     Seq(

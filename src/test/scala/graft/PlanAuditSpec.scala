@@ -158,7 +158,9 @@ class PlanAuditSpec extends SparkSpec {
       s"semantic dedup fell back to a product join:\n$p")
   }
 
-  test("semantic dedup evaluates the probe kernel in exactly one stage") {
+  /** Every operator semDedup ran on the fixture embeddings, each stage
+    * once (a reused exchange or stage is not entered). */
+  private def semDedupNodes(): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -173,17 +175,41 @@ class PlanAuditSpec extends SparkSpec {
       nCentroids = 16, trained = Some(cents))
     // under AQE this fixes the final plan
     assert(out.collect().exists(_.getBoolean(1)), "no row was removed")
-    // every stage that runs, once: a reused exchange or stage is not entered
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case _: ReusedExchangeExec => Nil
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
       case _ => p.children.flatMap(nodes)
     })
-    val probing = nodes(out.queryExecution.executedPlan).filter(_.expressions.exists(
+    nodes(out.queryExecution.executedPlan)
+  }
+
+  test("semantic dedup evaluates the probe kernel in exactly one stage") {
+    val probing = semDedupNodes().filter(_.expressions.exists(
       _.exists(_.isInstanceOf[graft.plans.IvfProbesPrunedExpr])))
     assert(probing.size == 1, s"the probe kernel runs in ${probing.size} " +
       s"operators:\n${probing.map(_.simpleString(200)).mkString("\n")}")
+  }
+
+  test("semantic dedup scores clusters in one kernel: no pair rows, vector joins or dots") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, PosExplode}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val all = semDedupNodes()
+    def show(ps: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      ps.map(_.simpleString(200)).mkString("\n")
+    // the pair plan's dot (native or its HOF fallback) and pair generator
+    val dots = all.filter(_.expressions.exists(_.exists {
+      case _: graft.plans.DotF32 | _: ArrayAggregate | _: PosExplode => true
+      case _ => false }))
+    assert(dots.isEmpty, s"semDedup evaluates pair dots or pairs:\n${show(dots)}")
+    val vectorJoins = all.collect { case j: BaseJoinExec => j }.filter(_.output.exists(
+      _.dataType match { case ArrayType(FloatType, _) => true; case _ => false }))
+    assert(vectorJoins.isEmpty, s"semDedup joins vectors:\n${show(vectorJoins)}")
+    val scoring = all.filter(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.plans.ClusterDupesExpr])))
+    assert(scoring.size == 1,
+      s"the cluster kernel runs in ${scoring.size} operators:\n${show(scoring)}")
   }
 
   test("dsir: model joins broadcast, scores partial-aggregate, no product") {

@@ -2095,7 +2095,54 @@ class SimilaritySpec extends SparkSpec {
       assert(want.size >= 40, s"k=$k: the reference found only ${want.size}")
       assert(got == want, s"k=$k: only-kernel=${(got -- want).take(5)}, " +
         s"only-reference=${(want -- got).take(5)}")
+      // the pair plan the kernel replaced, over the flat and the two-level
+      // assignment: identical removed sets on unique ids
+      for (hier <- Seq(false, true)) {
+        val kernel = Similarity.semDedup(df, "id", "v", dim, tau, nProbe = 2,
+          trained = Some(cents), hierAssign = hier)
+          .where(col("removed")).select("id").as[Long].collect().toSet
+        val pairPlan = SemDedupOracles.semDedup(df, "id", "v", tau, cents, nProbe = 2,
+          hierAssign = hier).where(col("removed")).select("id").as[Long].collect().toSet
+        assert(kernel == pairPlan, s"k=$k hier=$hier: only-kernel=" +
+          s"${(kernel -- pairPlan).take(5)}, only-pair-plan=${(pairPlan -- kernel).take(5)}")
+      }
     }
+  }
+
+  test("semDedup: zero, empty and all-null vectors are never duplicates, under ANSI") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val rows = Seq[(Long, Seq[java.lang.Float])](
+      1L -> Seq(1f, 0f), 2L -> Seq(0f, 0f), 3L -> Seq(), 4L -> Seq(null, null),
+      5L -> Seq(0.5f, 0.5f), 6L -> Seq(0f, 0f), 7L -> Seq(-0f, 0f))
+    val df = rows.toDF("id", "v").select(col("id"), col("v").cast("array<float>").as("v"))
+    // one centroid: every vector shares the one cluster, and tau = -1 makes
+    // every pair of non-zero vectors a duplicate
+    val cents = Array(Array(1f, 0f))
+    val got = Similarity.semDedup(df, "id", "v", 2, -1.0, nProbe = 1,
+      trained = Some(cents)).as[(Long, Boolean)].collect().toMap
+    assert(got == Map(1L -> false, 2L -> false, 3L -> false, 4L -> false,
+      5L -> true, 6L -> false, 7L -> false), got.toString)
+    val oracle = SemDedupOracles.semDedup(df, "id", "v", -1.0, cents, nProbe = 1)
+      .as[(Long, Boolean)].collect().toMap
+    assert(got == oracle, s"kernel $got, pair plan $oracle")
+  }
+
+  test("semDedup is row-level: a repeated id's other vectors are not witnesses") {
+    // nProbe 1: (1,0) and (0,1) share cluster 0, (0,10) alone in cluster 1
+    val df = Seq((1L, Array(1f, 0f)), (1L, Array(0f, 10f)), (2L, Array(0f, 1f)))
+      .toDF("id", "v")
+    val cents = Array(Array(1f, 0f), Array(0f, 3f))
+    val assigned = Similarity.assignProbes(df, "id", "v", cents, 1)
+      .as[(Long, Int)].collect().sorted.toSeq
+    assert(assigned == Seq((1L, 0), (1L, 1), (2L, 0)), assigned.toString)
+    val got = Similarity.semDedup(df, "id", "v", 2, 0.9, nProbe = 1,
+      trained = Some(cents)).as[(Long, Boolean)].collect().sorted.toSeq
+    assert(got == Seq((1L, false), (1L, false), (2L, false)), got.toString)
+    // the pair plan joined every vector of id 1, so (0,10) — which shares
+    // no cluster with id 2 — removed it
+    val pairPlan = SemDedupOracles.semDedup(df, "id", "v", 0.9, cents, nProbe = 1)
+      .as[(Long, Boolean)].collect().sorted.toSeq
+    assert(pairPlan == Seq((1L, false), (1L, false), (2L, true)), pairPlan.toString)
   }
 
   test("bound-pruned assignment is set-exact vs the table path") {
