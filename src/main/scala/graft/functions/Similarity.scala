@@ -122,44 +122,31 @@ object Similarity {
   // IVF (inverted-file) ANN: coarse k-means quantizer + inverted lists.
   // ------------------------------------------------------------------
 
-  /** Deterministic coarse k-means over the corpus: seeded init (the k vectors
-    * with the lowest xxhash64(id, seed)), a fixed iteration count, and
-    * centroid updates as per-dimension averages. Returns the centroid matrix.
+  /** Deterministic coarse k-means over the corpus: seeded init (the k
+    * non-null vectors with the lowest xxhash64(id, seed), ties to the lower
+    * id), a fixed iteration count, and centroid updates as per-element
+    * means (a null element is left out of its cell's mean; a cluster with no
+    * members keeps its previous centroid). Null vectors take no part; a
+    * vector whose length is not `dim`, or that holds a NaN or infinite
+    * element, fails with an IllegalArgumentException naming its id, the
+    * position and the value. Returns the centroid matrix.
     *
-    * Scale notes: each iteration is one broadcast-argmax assignment pass plus a
-    * per-(cluster, dim) average — `posexplode` + hash agg, shuffle bounded by
-    * k×dim cells. Only the k×dim centroid MODEL is ever collected to the
-    * driver (bounded, like any trained model); at 100 TB you train on a sample
-    * and assign the full corpus once. Averages are fp sums, so centroids are
-    * deterministic only up to accumulation order — callers must not depend on
-    * exact list boundaries (the probe margin absorbs this). */
+    * Scale notes: one job draws the init and one job runs each iteration
+    * ([[KMeans]]): every task assigns its rows through the probe kernel of
+    * [[ivfProbes]] and sums them into primitive per-(cluster, element)
+    * partials, at most min(k, rows)·dim cells, which the driver adds in
+    * partition order. Nothing of size n·dim is shuffled or collected; only
+    * the k×dim centroid MODEL lives on the driver (bounded, like any
+    * trained model); at 100 TB you train on a sample and assign the full
+    * corpus once. Sums are fp, so the centroids depend on the partitioning
+    * in their last bits (bit-identical at the same partitioning) — callers
+    * must not depend on exact list boundaries (the probe margin absorbs
+    * this). */
   def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
                nCentroids: Int = 16, iters: Int = 5,
-               seed: Long = 42L): Array[Array[Float]] = {
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    var centroids: Array[Array[Float]] = base
-      .withColumn("__h", xxhash64(col("id"), lit(seed)))
-      .orderBy(col("__h"), col("id")).limit(nCentroids)
-      .select(col("v")).collect()
-      .map(_.getSeq[Float](0).toArray)
-    // the assignment is a per-row column over an input spread across the
-    // cores: at large k the probe work dominates each iteration, and a
-    // narrow scan would run all of it on one core
-    val spread = spreadWide(base)
-    for (_ <- 1 to iters) {
-      val cells = spread.withColumn("__cid", ivfAssign(col("v"), centroids))
-        .select(col("__cid"), posexplode(col("v")).as(Seq("__pos", "__x")))
-        .groupBy(col("__cid"), col("__pos"))
-        .agg(avg(col("__x")).as("__m"))
-        .collect()
-      val next = centroids.map(_.clone())
-      cells.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2).toFloat
-      }
-      centroids = next // clusters with no members keep their previous centroid
-    }
-    centroids
-  }
+               seed: Long = 42L): Array[Array[Float]] =
+    KMeans.train(corpus, idCol, vecCol, dim, 1, nCentroids, iters, Seq(seed),
+      "ivfTrain").head
 
   /** Nearest-centroid id for a vector: argmax of (v·c - |c|²/2), the euclidean
     * argmin rewritten as k native dot products (codegen'd; ~k×dim flops/row).
@@ -182,12 +169,17 @@ object Similarity {
     * non-empty, rectangular and finite: IvfPruned.validate names the first
     * row that is not. */
   def ivfProbes(vec: Column, centroids: Array[Array[Float]], nProbe: Int): Column = {
-    graft.plans.IvfPruned.validate(centroids) // before the driver-side k-means
-    val (supers, gid) = superGroups(centroids)
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.plans.IvfProbesPrunedExpr(
-      ColumnBridge.expression(vec),
-      graft.plans.IvfPruned.build(centroids, supers, gid), nProbe))
+      ColumnBridge.expression(vec), probeModel(centroids), nProbe))
+  }
+
+  /** The probe kernel's model of a centroid matrix: its [[superGroups]]
+    * geometry and bounds (graft.plans.IvfPruned.build). */
+  private[graft] def probeModel(centroids: Array[Array[Float]]): graft.plans.IvfPrunedModel = {
+    graft.plans.IvfPruned.validate(centroids) // before the driver-side k-means
+    val (supers, gid) = superGroups(centroids)
+    graft.plans.IvfPruned.build(centroids, supers, gid)
   }
 
   /** ANN top-k via IVF inverted lists: corpus vectors are assigned once to
@@ -237,12 +229,12 @@ object Similarity {
     * assigns on its own (ids need not be unique), and a null vector yields
     * no rows. `withVec` also carries each row's vector, as `vecCol`, next
     * to its `__cid` (semDedup scores the clusters from it). The input is
-    * spread across the cores first ([[spreadWide]]), since the probe work
-    * per row grows with k. */
+    * spread across the cores first ([[Caching.spreadThin]]), since the
+    * probe work per row grows with k. */
   def assignProbes(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]], nProbe: Int,
       withVec: Boolean = false): DataFrame =
-    spreadWide(df.select(col(idCol), col(vecCol).as("__av")))
+    Caching.spreadThin(df.select(col(idCol), col(vecCol).as("__av")))
       .select(Seq(col(idCol),
         explode(ivfProbes(col("__av"), centroids, nProbe)).as("__cid")) ++
         carried(withVec, vecCol): _*)
@@ -250,18 +242,6 @@ object Similarity {
   /** The vector column an assignment carries when asked to. */
   private def carried(withVec: Boolean, vecCol: String): Seq[Column] =
     if (withVec) Seq(col("__av").as(vecCol)) else Nil
-
-  /** Spread a thin input across the cluster before a heavy per-row
-    * projection: a narrow scan (one parquet file) would otherwise run the
-    * whole k-scaled probe stream on one core. Wide inputs (the 100 TB
-    * case) already parallelize and skip the shuffle. The partition count
-    * is read from the plan's own RDD: `rows.rdd` would plan the query a
-    * second time under a row deserializer (~30 ms a call). */
-  private def spreadWide(rows: DataFrame): DataFrame = {
-    val par = rows.sparkSession.sparkContext.defaultParallelism
-    if (rows.queryExecution.toRdd.getNumPartitions >= par) rows
-    else rows.repartition(par)
-  }
 
   /** Deterministic driver-side Lloyd's k-means over a MODEL-sized point set
     * (the centroid matrix itself — k×dim floats, never corpus data): evenly
@@ -454,7 +434,7 @@ object Similarity {
     val rows = df.where(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol).as("__av"))
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    spreadWide(rows).select(Seq(col(idCol),
+    Caching.spreadThin(rows).select(Seq(col(idCol),
       explode(ColumnBridge.column(graft.plans.IvfProbesHierExpr(
         ColumnBridge.expression(col("__av")), model,
         nProbe, math.min(groupProbe, probeSupers.length)))).as("__cid")) ++
@@ -482,7 +462,8 @@ object Similarity {
     * IVF-list analogue of LSH bands), with no all-pairs stage. The
     * assignment is evaluated once per call (one stage runs the probe
     * kernel, besides ivfTrain's) and carries each row's vector; each
-    * cluster's members are collected into one list and scored in place by
+    * cluster's members are collected into one list (over one partition
+    * per core, by cluster id) and scored in place by
     * one codegen'd kernel (graft.plans.ClusterDupes: each member read and
     * normed once, at most m(m−1)/2 dots for m members), which returns only
     * the removed ids — no pair rows, pair shuffle or vector join. A
@@ -514,8 +495,13 @@ object Similarity {
         withVec = true)
       else assignProbes(keyed, "__id", "__v", centroids, nProbe, withVec = true)
     // the assignment is evaluated ONCE; a vector removed from two shared
-    // clusters comes out twice, hence the distinct
-    val removedIds = assigned.groupBy(col("__cid"))
+    // clusters comes out twice, hence the distinct. The cluster exchange is
+    // pinned to one partition per core: adaptive execution would coalesce
+    // the small list shuffle into one task and run every cluster's kernel
+    // on one core. The grouping reuses that partitioning.
+    val removedIds = assigned
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism, col("__cid"))
+      .groupBy(col("__cid"))
       .agg(collect_list(struct(col("__id"), col("__v"))).as("__m"))
       .select(explode(clusterDupes(col("__m"), tau)).as("__rid"))
       .distinct()
@@ -538,20 +524,18 @@ object Similarity {
   // ------------------------------------------------------------------
 
   /** Train M per-subspace PQ codebooks (ksub centroids over each dim/M-wide
-    * slice) — M independent deterministic k-means runs over sliced vectors.
+    * slice): M deterministic k-means runs over the sliced vectors, sub-space
+    * mi seeded with seed + mi, each equal to [[ivfTrain]] over its slice
+    * (null vectors skipped; the whole vector must have `dim` finite or null
+    * elements). The M sub-spaces train in the same passes ([[KMeans]]): one
+    * job draws every init and one job runs each iteration for all of them.
     * The model is M·ksub·(dim/M) floats, driver-bounded like any trained
     * model; at 100 TB you train on a sample and encode the corpus once. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
               m: Int = 8, ksub: Int = 16, iters: Int = 5,
-              seed: Long = 42L): Array[Array[Array[Float]]] = {
-    require(dim % m == 0, "pq: dim must divide evenly into m subspaces")
-    val dsub = dim / m
-    (0 until m).map { mi =>
-      val sub = corpus.select(col(idCol).as("id"),
-        slice(col(vecCol), mi * dsub + 1, dsub).as("v"))
-      ivfTrain(sub, "id", "v", dsub, ksub, iters, seed + mi)
-    }.toArray
-  }
+              seed: Long = 42L): Array[Array[Array[Float]]] =
+    KMeans.train(corpus, idCol, vecCol, dim, m, ksub, iters,
+      (0 until m).map(seed + _), "pqTrain")
 
   /** Encode a vector to its M-id PQ code (nearest codebook entry per
     * subspace) — the 256-byte float vector becomes M small ints: the

@@ -732,6 +732,13 @@ object IvfPruned {
     topProbes(ids, scoresOf(v, m, ids), math.min(math.max(nProbe, 0), m.cents.length))
   }
 
+  /** The nearest centroid of row v ([[rowOf]]): `eval(vec, m, 1)`'s one
+    * probe, through the same candidates and scoring loop. */
+  def nearest(v: Array[Double], m: IvfPrunedModel): Int = {
+    val ids = candidates(v, m, 1)
+    topProbes(ids, scoresOf(v, m, ids), 1).getInt(0)
+  }
+
   /** The members of the groupProbe best super-groups, best group first
     * (supers scored v·s − |s|²/2, Double.compare, ties to the lower group
     * id) — the candidate set of [[evalHier]]. */

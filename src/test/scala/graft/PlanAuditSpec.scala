@@ -212,6 +212,33 @@ class PlanAuditSpec extends SparkSpec {
       s"the cluster kernel runs in ${scoring.size} operators:\n${show(scoring)}")
   }
 
+  test("semantic dedup: one cluster exchange, one partition per core, read uncoalesced") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val all = semDedupNodes()
+    val byCid = all.collect { case e: ShuffleExchangeExec => e }.filter(
+      _.outputPartitioning match {
+        case h: HashPartitioning => h.references.exists(_.name == "__cid")
+        case _ => false
+      })
+    assert(byCid.size == 1, s"semDedup shuffles by cluster id ${byCid.size} times:\n" +
+      byCid.map(_.simpleString(200)).mkString("\n"))
+    val par = spark.sparkContext.defaultParallelism
+    assert(byCid.head.outputPartitioning.numPartitions == par,
+      s"the cluster exchange has ${byCid.head.outputPartitioning.numPartitions} " +
+        s"partitions, not $par")
+    // adaptive execution must not coalesce the kernel stage's input
+    val coalesced = all.collect {
+      case r: AQEShuffleReadExec if (r.child match {
+        case q: ShuffleQueryStageExec => byCid.exists(_ eq q.shuffle)
+        case _ => false
+      }) && r.partitionSpecs.length < par => r
+    }
+    assert(coalesced.isEmpty, s"the cluster exchange is read as " +
+      s"${coalesced.map(_.partitionSpecs.length).mkString(",")} partitions")
+  }
+
   test("dsir: model joins broadcast, scores partial-aggregate, no product") {
     val p = plan("q_dsir_weights")
     // the 4096-row log-ratio model must reach scoring as a broadcast — a

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.scalacheck.Gen
 import graft.functions.Similarity
 import graft.sources.Tables
 import graft.kql.Kql._
@@ -2303,5 +2306,198 @@ class SimilaritySpec extends SparkSpec {
     // and the refreshed models must match what a raw (uncached) read sees
     assert(retrained._1.map(_.toSeq).toSeq ==
       Similarity.readIndexModels(spark, dir)._1.map(_.toSeq).toSeq)
+  }
+
+  // ------------------------------------------------------------------
+  // k-means training: the partial-sum trainer against KMeansOracles.
+  // ------------------------------------------------------------------
+
+  private val trainSchema = StructType(Seq(StructField("id", LongType),
+    StructField("v", ArrayType(FloatType, containsNull = true))))
+
+  /** (id, vector) rows over `slices` RDD partitions (more slices than rows
+    * leaves some empty; fewer than the session's cores makes the trainer
+    * spread them). A null vector or element stays null. */
+  private def trainFrame(rows: Seq[(Long, Array[java.lang.Float])], slices: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (id, v) =>
+      Row(id, if (v == null) null else v.toSeq) }, slices), trainSchema)
+
+  private def showRows(rows: Seq[(Long, Array[java.lang.Float])]): String =
+    rows.map { case (id, v) =>
+      s"$id:" + (if (v == null) "null" else v.mkString("[", ",", "]")) }.mkString(" ")
+
+  private def showCents(c: Array[Array[Float]]): String =
+    c.map(_.mkString("[", ",", "]")).mkString(",")
+
+  /** Training inputs for the properties: 1–20 rows with unique ids, the
+    * first vector non-null; others drawn from `elem` (null elements
+    * included), copies of a three-vector pool (ties), or null. */
+  private def trainRowsGen(dim: Int,
+      elem: Gen[java.lang.Float]): Gen[List[(Long, Array[java.lang.Float])]] = {
+    val finite = Gen.listOfN(dim, elem).map(_.toArray)
+    for {
+      n <- Gen.choose(1, 20)
+      pool <- Gen.listOfN(3, finite)
+      first <- finite
+      rest <- Gen.listOfN(n - 1, Gen.frequency(6 -> finite, 3 -> Gen.oneOf(pool),
+        1 -> Gen.const(null: Array[java.lang.Float])))
+      ids <- Gen.pick(n, 0L until 1000L)
+    } yield ids.toList.zip(first :: rest)
+  }
+
+  private val smallInts: Gen[java.lang.Float] = Gen.frequency(
+    8 -> Gen.choose(-3, 3).map(i => java.lang.Float.valueOf(i.toFloat)), 1 -> Gen.const(null))
+
+  test("ivfTrain equals the cell-aggregate oracle on nulls, ties, empty partitions and clusters") {
+    import org.scalacheck.{Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    val floats: Gen[java.lang.Float] = Gen.frequency(
+      8 -> Gen.choose(-2.0, 2.0).map(x => java.lang.Float.valueOf(x.toFloat)),
+      1 -> Gen.const(null))
+    def caseGen(elem: Gen[java.lang.Float]) = for {
+      dim <- Gen.choose(1, 4)
+      rows <- trainRowsGen(dim, elem)
+      k <- Gen.oneOf(1, 2, 3, rows.size + 2)
+      iters <- Gen.choose(0, 3)
+      slices <- Gen.choose(1, 6)
+      seed <- Gen.choose(0L, 99L)
+    } yield (dim, rows, k, iters, slices, seed)
+    // small integers sum exactly in any order, so the trainer must equal
+    // the oracle bit for bit; random floats may differ in the last bit
+    def within(ulps: Int)(a: Float, b: Float): Boolean =
+      if (ulps == 0) java.lang.Float.floatToIntBits(a) == java.lang.Float.floatToIntBits(b)
+      else math.abs(a - b) <= ulps * math.ulp(math.max(math.abs(a), math.abs(b)))
+    Seq(("small integers", smallInts, 0, 40), ("random floats", floats, 1, 20)).foreach {
+      case (name, elem, ulps, runs) =>
+        val prop = Prop.forAllNoShrink(caseGen(elem)) {
+          case (dim, rows, k, iters, slices, seed) =>
+            val df = trainFrame(rows, slices)
+            val got = Similarity.ivfTrain(df, "id", "v", dim, k, iters, seed)
+            val want = KMeansOracles.ivfTrain(df, "id", "v", k, iters, seed)
+            val same = got.length == want.length && got.indices.forall(i =>
+              got(i).length == dim && got(i).indices.forall(j =>
+                within(ulps)(got(i)(j), want(i)(j))))
+            same :| (s"dim=$dim k=$k iters=$iters slices=$slices seed=$seed " +
+              s"rows=${showRows(rows)} got=${showCents(got)} oracle=${showCents(want)}")
+        }
+        val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(runs), prop)
+        assert(res.passed, s"$name: ${res.status}")
+    }
+  }
+
+  test("pqTrain equals one oracle run per sub-space slice") {
+    import org.scalacheck.{Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    val caseGen = for {
+      m <- Gen.oneOf(2, 3)
+      dsub <- Gen.oneOf(1, 2)
+      rows <- trainRowsGen(m * dsub, smallInts)
+      ksub <- Gen.oneOf(1, 2, rows.size + 2)
+      iters <- Gen.choose(0, 2)
+      slices <- Gen.choose(1, 6)
+    } yield (m, dsub, rows, ksub, iters, slices)
+    val prop = Prop.forAllNoShrink(caseGen) { case (m, dsub, rows, ksub, iters, slices) =>
+      val df = trainFrame(rows, slices)
+      val got = Similarity.pqTrain(df, "id", "v", m * dsub, m, ksub, iters, 5L)
+      val want = KMeansOracles.pqTrain(df, "id", "v", m * dsub, m, ksub, iters, 5L)
+      val bad = (0 until m).find(mi => got(mi).length != want(mi).length ||
+        got(mi).indices.exists(i => !java.util.Arrays.equals(got(mi)(i), want(mi)(i))))
+      bad.isEmpty :| bad.map(mi => s"m=$m dsub=$dsub ksub=$ksub iters=$iters " +
+        s"slices=$slices sub-space $mi rows=${showRows(rows)} " +
+        s"got=${showCents(got(mi))} oracle=${showCents(want(mi))}").getOrElse("")
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("ivfTrain and pqTrain fire one job for the init and one per iteration") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val emb = Tables.load(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
+    val sc = spark.sparkContext
+    // jobs started in the group, counted once a later fence job's start
+    // proves every earlier event was delivered
+    def jobs(body: => Unit): Int = {
+      val counted = new java.util.concurrent.atomic.AtomicInteger()
+      val fenced = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some("kmeans-jobs") => counted.incrementAndGet()
+            case Some("kmeans-fence") => fenced.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("kmeans-jobs", "training")
+        try body finally sc.clearJobGroup()
+        sc.setJobGroup("kmeans-fence", "listener fence")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+      counted.get
+    }
+    for (t <- Seq(0, 1, 3)) {
+      val ivf = jobs(Similarity.ivfTrain(emb, "vec_id", "embedding", 64,
+        nCentroids = 16, iters = t))
+      assert(ivf == 1 + t, s"ivfTrain(iters = $t) fired $ivf jobs")
+      val pq = jobs(Similarity.pqTrain(emb, "vec_id", "embedding", 64, m = 8, iters = t))
+      assert(pq == 1 + t, s"pqTrain(m = 8, iters = $t) fired $pq jobs")
+    }
+    // a fixed merge order: two runs at the same parallelism agree bit for bit
+    val a = Similarity.ivfTrain(emb, "vec_id", "embedding", 64, nCentroids = 32, iters = 3)
+    val b = Similarity.ivfTrain(emb, "vec_id", "embedding", 64, nCentroids = 32, iters = 3)
+    assert(java.util.Arrays.deepEquals(a.asInstanceOf[Array[AnyRef]],
+      b.asInstanceOf[Array[AnyRef]]))
+  }
+
+  /** A four-dim training frame with row 13 replaced by `bad`. */
+  private def withBadRow(bad: Array[java.lang.Float]): DataFrame = {
+    def v(xs: Float*): Array[java.lang.Float] = xs.map(java.lang.Float.valueOf).toArray
+    trainFrame(Seq(1L -> v(1f, 0f, 0f, 0f), 13L -> bad, 5L -> v(0f, 1f, 0f, 0f),
+      7L -> v(0f, 0f, 1f, 1f)), 2)
+  }
+
+  /** The message both trainers reject `bad` with (every row is drawn at
+    * init: k exceeds the row count). */
+  private def rejection(bad: Array[java.lang.Float]): Seq[String] = {
+    val df = withBadRow(bad)
+    Seq(intercept[IllegalArgumentException](
+        Similarity.ivfTrain(df, "id", "v", 4, nCentroids = 8, iters = 2)).getMessage,
+      intercept[IllegalArgumentException](
+        Similarity.pqTrain(df, "id", "v", 4, m = 2, ksub = 8, iters = 2)).getMessage)
+  }
+
+  test("training skips a null vector among the init rows") {
+    val df = withBadRow(null)
+    val cents = Similarity.ivfTrain(df, "id", "v", 4, nCentroids = 8, iters = 2)
+    assert(cents.length == 3 && cents.forall(_.length == 4), showCents(cents))
+    assert(cents.map(_.toSeq).toSet == Set(Seq(1f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f),
+      Seq(0f, 0f, 1f, 1f)), showCents(cents))
+    val books = Similarity.pqTrain(df, "id", "v", 4, m = 2, ksub = 8, iters = 2)
+    assert(books.forall(b => b.length == 3 && b.forall(_.length == 2)))
+  }
+
+  test("training rejects a vector longer than dim by id, position and value") {
+    val msgs = rejection(Array(1f, 2f, 3f, 4f, 5f, 6f).map(java.lang.Float.valueOf))
+    assert(msgs.head == "ivfTrain: the vector of id 13 has 6 elements, not dim = 4 " +
+      "(position 4: 5.0)", msgs.head)
+    assert(msgs(1).startsWith("pqTrain: the vector of id 13 has 6 elements"), msgs(1))
+  }
+
+  test("training rejects a vector shorter than dim by id and position") {
+    val msgs = rejection(Array(1f, 2f).map(java.lang.Float.valueOf))
+    assert(msgs.head == "ivfTrain: the vector of id 13 has 2 elements, not dim = 4 " +
+      "(position 2: missing)", msgs.head)
+    assert(msgs(1).startsWith("pqTrain: the vector of id 13 has 2 elements"), msgs(1))
+  }
+
+  test("training rejects a NaN or infinite element by id, position and value") {
+    val nan = rejection(Array(1f, Float.NaN, 0f, 0f).map(java.lang.Float.valueOf))
+    assert(nan.forall(_.endsWith(
+      "the vector of id 13 has the non-finite element NaN at position 1")), nan.toString)
+    val inf = rejection(Array[java.lang.Float](0f, null, 0f, Float.NegativeInfinity))
+    assert(inf.forall(_.endsWith(
+      "the vector of id 13 has the non-finite element -Infinity at position 3")), inf.toString)
   }
 }
